@@ -1,6 +1,7 @@
 """Deterministic per-document kernels.
 
 These are pure Python functions applied *batched* inside pandas/Arrow UDFs
-(see kgspark.pipeline.*).  They are the only Python that ever touches row
-content; everything else in the engine is JVM-side DataFrame operations.
+and ``mapInArrow`` passes (see kgspark.pipeline.*).  They are the only
+Python that ever touches row content; everything else in the engine is
+JVM-side DataFrame operations.
 """

@@ -6,17 +6,11 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
-# reference entity_standardization.py:33
-PRED_STOP_WORDS = ["a", "an", "the", "of", "with", "by", "to", "from", "in", "on", "for"]
-# reference entity_standardization.py:88
-NORM_STOP_WORDS = [
-    "the", "a", "an", "of", "and", "or", "in", "on", "at", "to",
-    "for", "with", "by", "as",
-]
+from kgspark.kernels.doc_kg import PRED_STOP_WORDS
 
 
 def words_of(col: Column) -> Column:
-    """Python ``str.split()`` semantics: whitespace runs, no empties."""
+    """Whitespace runs, no empties (Java ``\\s``: ASCII whitespace only)."""
     return F.filter(F.split(col, r"\s+"), lambda w: w != "")
 
 
@@ -27,47 +21,7 @@ def limit_predicate(col: Column, max_words: int = 3) -> Column:
     ws = words_of(col)
     kept = F.slice(ws, 1, max_words)
     trimmed = F.when(
-        F.lower(F.element_at(kept, max_words)).isin(PRED_STOP_WORDS),
+        F.lower(F.element_at(kept, max_words)).isin(sorted(PRED_STOP_WORDS)),
         F.slice(kept, 1, max_words - 1),
     ).otherwise(kept)
     return F.when(F.size(ws) <= max_words, col).otherwise(F.array_join(trimmed, " "))
-
-
-def norm_key(col: Column) -> Column:
-    """Blocking key: lowercase, ``\\b\\w+\\b`` tokens, drop stopwords,
-    rejoin (reference entity_standardization.py:84-90).  ``(?U)`` gives
-    Java regex the same unicode word classes as Python ``\\w``."""
-    toks = F.regexp_extract_all(F.lower(col), F.lit(r"(?U)\w+"), 0)
-    return F.array_join(
-        F.filter(toks, lambda t: ~t.isin(NORM_STOP_WORDS)), " "
-    )
-
-
-def word_set(col: Column) -> Column:
-    """``set(x.split())`` as a deduplicated array."""
-    return F.array_distinct(words_of(col))
-
-
-def stem_set(col_words: Column) -> Column:
-    """``{w[:4] for w in words if len(w) > 4}``
-    (reference entity_standardization.py:148-149)."""
-    return F.array_distinct(
-        F.transform(
-            F.filter(col_words, lambda w: F.length(w) > 4),
-            lambda w: F.substring(w, 1, 4),
-        )
-    )
-
-
-def longest_smallest(arr: Column) -> Column:
-    """Pick the longest element; ties → lexicographically smallest
-    (canonicalization D3 in tests/oracle/refsem.py)."""
-    return F.aggregate(
-        arr,
-        F.lit(""),
-        lambda acc, x: F.when(
-            (F.length(x) > F.length(acc))
-            | ((F.length(x) == F.length(acc)) & (x < acc)),
-            x,
-        ).otherwise(acc),
-    )

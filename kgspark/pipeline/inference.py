@@ -1,178 +1,51 @@
-"""Phase 3 — relationship inference as DataFrame operations.
+"""Phase 3 — relationship inference, one document at a time.
 
 Reference: entity_standardization.py:190-278 (infer_relationships with
 use_llm_for_inference=False): transitive inference (:321-361), lexical
 similarity inference (:664-755), dedup (:363-382), final predicate limit +
-self-loop filter (:268-275).  All keyed by ``url`` (per-document scope,
-distributes across documents).
+self-loop filter (:268-275).  Like phase 2, the rows of each url go
+through the per-document kernel ``kgspark.kernels.doc_kg`` in one url
+aggregation plus one ``mapInArrow`` pass (``kgspark.pipeline.perdoc``).
 
-Scale notes (SURVEY §4):
-* transitive = one self-join on (url, object==subject) + one anti-join —
-  shuffle on the url+entity key, AQE handles skew.
-* lexical = the O(n²)-per-document pair join; n = distinct entities per
-  document (bounded by doc size), so the join is (url equi-key) × (pair
-  filter) — no corpus-global blowup.  The corpus-global variant of this is
-  the MinHash-LSH linking stage (kgspark.pipeline.linking), not this.
+Stage map (SURVEY §2.4), all in ``kgspark.kernels.doc_kg``:
+  O-19 adjacency build      → ``edges_of``: (s, o) → last predicate by seq
+  O-23 transitive           → ``transitive``
+  O-24 lexical similarity   → ``lexical``: the O(n²) pair scan over the
+        document's n entities (bounded by document size; the
+        corpus-global variant is the MinHash-LSH linking stage,
+        kgspark.pipeline.linking)
+  O-25 dedup                → ``infer_doc``; ``dedup_triples`` below is
+        the same rule as a JVM aggregation, for ``kg_dedup_triples``
+  O-10 / O-18 final limit + self-loop filter → ``infer_doc``
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
-from kgspark.pipeline.exprs import limit_predicate, longest_smallest, word_set
+from kgspark.kernels import doc_kg
+from kgspark.pipeline.perdoc import map_docs
 
-
-def _edges_with_last_predicate(triples: DataFrame) -> DataFrame:
-    """(url, s, o, pred): last predicate in original order wins for
-    duplicate (s, o) pairs (reference :334-338 dict overwrite)."""
-    return triples.groupBy("url", "subject", "object").agg(
-        F.max_by("predicate", "seq").alias("pred")
-    )
+_ROW = ("subject", "predicate", "object", "chunk", "seq")
+_STR = T.StringType()
+_TRIPLE_FIELDS = [T.StructField(c, _STR) for c in ("subject", "predicate", "object")]
 
 
 def transitive_inference(triples: DataFrame) -> DataFrame:
-    """A→B→C ⇒ (A, f(p1,p2), C) for absent (A, C) (reference :321-361).
-
-    Fused per url: the deduped edge list of a document is collected into
-    one array and the path join + existing-edge anti-join + distinct all
-    run as higher-order-function expressions over it.  Replaces the
-    earlier 3-consumer formulation (the edges aggregate fed a self-join
-    AND an anti-join — with no exchange boundary under the url
-    partitioning, Spark recomputed the aggregation per consumer) and its
-    three sort-merge sorts.  Safe per-group state: edges-per-url is
-    bounded by document size, never corpus size."""
-    edges = _edges_with_last_predicate(triples)
-    g = edges.groupBy("url").agg(
-        F.collect_list(F.struct(F.col("subject").alias("s"),
-                                F.col("object").alias("o"),
-                                F.col("pred").alias("p"))).alias("es"))
-    es = F.col("es")
-
-    def _paths(e1):
-        # e1 chains into e2 when e1.o == e2.s; skip self-loops A == C —
-        # then emit the reference's composed predicate
-        return F.transform(
-            F.filter(es, lambda e2: (e1["o"] == e2["s"]) & (e1["s"] != e2["o"])),
-            lambda e2: F.struct(
-                e1["s"].alias("subject"),
-                limit_predicate(
-                    F.when(e1["p"] == e2["p"], F.concat(F.lit("indirectly "), e1["p"]))
-                    .otherwise(F.concat(e1["p"], F.lit(" via "), e1["o"]))
-                ).alias("predicate"),
-                e2["o"].alias("object")))
-
-    # the reference's existing-edge check runs AFTER the distinct, on the
-    # (much smaller) candidate list rather than inside the pair loop —
-    # the O(|es|) exists-scan is the expensive term, so evaluate it once
-    # per distinct candidate, not once per chained pair
-    cands = F.filter(
-        F.array_distinct(F.flatten(F.transform(es, _paths))),
-        lambda c: ~F.exists(es, lambda ed: (ed["s"] == c["subject"])
-                            & (ed["o"] == c["object"])))
-    return (g.select("url", F.explode(cands).alias("t"))
-             .select("url", "t.subject", "t.predicate", "t.object"))
+    """(url, subject, predicate, object): A→B→C ⇒ (A, f(p1,p2), C) for
+    absent (A, C) (reference :321-361)."""
+    return map_docs(triples, _ROW,
+                    lambda rows: doc_kg.transitive(doc_kg.edges_of(doc_kg.ordered(rows))),
+                    _TRIPLE_FIELDS)
 
 
 def lexical_inference(triples: DataFrame) -> DataFrame:
-    """Shared-word / containment inference over unconnected entity pairs
-    (reference :664-755).  Pair enumeration order canonicalized to lexical
-    (oracle deviation D2); shared-word pick canonicalized to longest-then-
-    smallest (D3).
-
-    Fused per url: the distinct entities of a document (with their
-    precomputed lowercase form and word set) and its canonically-oriented
-    edge set are each collected into one array; pair enumeration, the
-    connected-pair skip, and the shared-word/containment elif chain then
-    run as higher-order-function expressions.  Replaces the earlier plan
-    — a 2-consumer entity aggregate, a materialized per-url pair stream
-    (~300 rows per url through a sort-merge join), and a canonical-edge
-    anti-join — with one url-keyed join of two single-row-per-url
-    aggregates.  Entities-per-url is bounded by document size, so the
-    collected arrays stay KB-sized at any corpus scale."""
-    ents = (
-        triples.select("url", F.col("subject").alias("entity"))
-        .union(triples.select("url", F.col("object").alias("entity")))
-        .distinct()
-    )
-    enr = ents.select("url", F.struct(
-        F.col("entity").alias("e"),
-        F.lower("entity").alias("le"),
-        word_set(F.lower("entity")).alias("ws")).alias("f"))
-    # sorted by entity (unique per url) — i<j enumeration gives e1 < e2,
-    # the canonical pair order (oracle deviation D2)
-    g_ents = enr.groupBy("url").agg(F.array_sort(F.collect_list("f")).alias("fs"))
-    g_edges = (
-        triples.select(
-            "url",
-            F.struct(F.least("subject", "object").alias("x"),
-                     F.greatest("subject", "object").alias("y")).alias("k"))
-        .groupBy("url").agg(F.array_distinct(F.collect_list("k")).alias("eks"))
-    )
-    # same url set on both sides (both derive from the same triples)
-    g = g_ents.join(g_edges, "url")
-
-    fs, eks = F.col("fs"), F.col("eks")
-    n = F.size(fs)
-
-    def _score(i, j):
-        f1 = F.element_at(fs, i + 1)
-        f2 = F.element_at(fs, j + 1)
-        e1, l1, w1 = f1["e"], f1["le"], f1["ws"]
-        e2, l2, w2 = f2["e"], f2["le"], f2["ws"]
-        shared = F.array_intersect(w1, w2)
-        main = longest_smallest(shared)
-        starts1 = l1.startswith(main)
-        starts2 = l2.startswith(main)
-        # NB reference semantics: pairs WITH shared words but max shared
-        # < 4 chars emit nothing and are NOT containment-checked (elif
-        # chain); shared-word pick canonicalized longest-then-smallest (D3)
-        hit = (
-            F.when(
-                F.size(shared) > 0,
-                F.when(
-                    F.length(main) >= 4,
-                    F.when(starts1 & ~starts2,
-                           F.struct(e2.alias("subject"),
-                                    F.lit("relates to").alias("predicate"),
-                                    e1.alias("object")))
-                    .when(starts2 & ~starts1,
-                          F.struct(e1.alias("subject"),
-                                   F.lit("relates to").alias("predicate"),
-                                   e2.alias("object")))
-                    .otherwise(F.struct(e1.alias("subject"),
-                                        F.lit("related to").alias("predicate"),
-                                        e2.alias("object"))),
-                ),
-            )
-            .when(F.instr(l2, l1) > 0,
-                  F.struct(e2.alias("subject"), F.lit("is type of").alias("predicate"),
-                           e1.alias("object")))
-            .when(F.instr(l1, l2) > 0,
-                  F.struct(e1.alias("subject"), F.lit("is type of").alias("predicate"),
-                           e2.alias("object")))
-        )
-        return hit
-
-    # the connected-pair skip runs on HITS, not on every pair: the hit
-    # chain (small-array intersect + two instr) is cheap while the
-    # O(|eks|) connected exists-scan dominated the all-pairs loop
-    # (measured 64% of lexical wall at 300k pages); only a few percent
-    # of pairs hit, so post-filtering evaluates ~20x fewer scans.
-    # {subject, object} of a hit is always {e1, e2}, so the edge key is
-    # recomputed with least/greatest.  Bit-identical output (parity-
-    # checked at 300k: 420,183 rows, 0 differing).
-    pair_hits = F.filter(
-        F.flatten(F.transform(
-            F.sequence(F.lit(0), n - 2),
-            lambda i: F.transform(F.sequence(i + 1, n - 1), lambda j: _score(i, j)))),
-        lambda x: x.isNotNull() & ~F.exists(
-            eks, lambda k: (k["x"] == F.least(x["subject"], x["object"]))
-            & (k["y"] == F.greatest(x["subject"], x["object"]))))
-    empty = F.array().cast(
-        "array<struct<subject:string,predicate:string,object:string>>")
-    pair_hits = F.when(n >= 2, pair_hits).otherwise(empty)
-    return (g.select("url", F.explode(pair_hits).alias("t"))
-             .select("url", "t.subject", "t.predicate", "t.object"))
+    """(url, subject, predicate, object): shared-word / containment
+    inference over unconnected entity pairs (reference :664-755).  Pair
+    enumeration order canonicalized to lexical (oracle deviation D2);
+    shared-word pick canonicalized to longest-then-smallest (D3)."""
+    return map_docs(triples, ["subject", "object"],
+                    lambda rows: doc_kg.lexical(set(rows)), _TRIPLE_FIELDS)
 
 
 def dedup_triples(all_triples: DataFrame) -> DataFrame:
@@ -186,36 +59,13 @@ def dedup_triples(all_triples: DataFrame) -> DataFrame:
     )
 
 
-def infer(triples: DataFrame, partition_by_url: bool = True) -> DataFrame:
-    """Full phase 3.  Input: standardized triples
-    (url, chunk, seq, subject, predicate, object).
-
-    ``partition_by_url`` hash-partitions the input on ``url`` once:
-    every phase-3 groupBy / join key is url-prefixed, so (with
-    requireAllClusterKeysForCoPartition=false, set by the session
-    factory) the transitive/lexical joins and the edge aggregation all
-    reuse that one exchange instead of shuffling per stage."""
-    if partition_by_url:
-        triples = triples.repartition(F.col("url"))
-    originals = triples.select(
-        "url", "subject", "predicate", "object", "chunk", "seq",
-        F.lit(False).alias("inferred"),
-    )
-    trans = transitive_inference(triples).select(
-        "url", "subject", "predicate", "object",
-        F.lit(None).cast("int").alias("chunk"),
-        F.lit(None).cast("long").alias("seq"),
-        F.lit(True).alias("inferred"),
-    )
-    lex = lexical_inference(triples).select(
-        "url", "subject", "predicate", "object",
-        F.lit(None).cast("int").alias("chunk"),
-        F.lit(None).cast("long").alias("seq"),
-        F.lit(True).alias("inferred"),
-    )
-    combined = originals.unionByName(trans).unionByName(lex)
-    deduped = dedup_triples(combined)
-    return (
-        deduped.withColumn("predicate", limit_predicate(F.col("predicate")))
-        .filter(F.col("subject") != F.col("object"))
-    )
+def infer(triples: DataFrame) -> DataFrame:
+    """Full phase 3.  Input: standardized triples (url, chunk, seq,
+    subject, predicate, object).  Output: url, subject, predicate, object,
+    inferred, chunk, seq — inferred rows have null chunk and seq."""
+    return map_docs(triples, _ROW, doc_kg.infer_doc, [
+        *_TRIPLE_FIELDS,
+        T.StructField("inferred", T.BooleanType()),
+        T.StructField("chunk", triples.schema["chunk"].dataType),
+        T.StructField("seq", T.LongType()),
+    ])

@@ -205,9 +205,8 @@ def apply_linking(triples: DataFrame, link_map: DataFrame,
                   max_broadcast_rows: int = 5_000_000) -> DataFrame:
     """Rewrite subject/object through the (variant → canon) map.
 
-    Same broadcast-vs-shuffle sizing as
-    ``standardize.apply_entity_map``: the link map grows with the entity
-    vocabulary, so broadcast only under ``max_broadcast_rows``
+    The link map grows with the entity vocabulary, so broadcast only
+    under ``max_broadcast_rows``
     (cfg ``broadcast_map_max_rows``); above it the two applies shuffle
     on the entity key.  The sizing count runs on the UNpersisted frame —
     the map's tail lineage ends at connected_components' persisted label

@@ -4,7 +4,8 @@ Pipeline (SURVEY §3 EP-1/EP-2 restated on Spark):
 
   pages →(Arrow UDF extract_text)→ text →(Arrow UDF chunk, posexplode)→
   chunks →(Arrow UDF pattern extraction, posexplode)→ raw triples
-  →(phase 2 joins/windows)→ standardized →(phase 3 joins)→ final triples
+  →(phase 2 per-document kernel, one url exchange + mapInArrow)→ standardized
+  →(phase 3 per-document kernel, same shape)→ final triples
   → parquet/Iceberg sinks (triples, entities, edges) + manifests
 
 Resume contract (reference analog: completed-year scan + skip at

@@ -1,275 +1,66 @@
-"""Phase 2 — entity standardization as DataFrame operations.
+"""Phase 2 — entity standardization, one document at a time.
 
 Reference: entity_standardization.py:40-188 (standardize_entities with
-use_llm_for_entities=False).  All stages are keyed by ``url`` — the
-reference pipeline is per-document (one doc per run), so every groupBy /
-window / join here carries ``url`` in its key: the work distributes across
-documents with no corpus-global shuffle or collect anywhere.
+use_llm_for_entities=False).  The reference standardizes one document per
+run; here the rows of each url go through the per-document kernel
+``kgspark.kernels.doc_kg`` in one url aggregation plus one ``mapInArrow``
+pass (``kgspark.pipeline.perdoc``), so the work distributes across
+documents with no corpus-global state.
 
-Stage map (SURVEY §2.4):
-  O-11 entity extraction       → union + distinct
-  O-12 normalize-for-blocking  → norm_key expression (codegen'd)
-  O-13 blocking                → groupBy(url, normalized)
-  O-14 canonical pick          → struct-ordered min_by with the
-        reference's exact tie-break (-count, len(entity), entity) — the
-        lexical tail reproduces Python's stable sort over the (-len,
-        lex) presort; round 5 replaced the window formulation (see
-        folded_entity_map: the window output was consumed twice, and in
-        the exchange-free phase-2 region each consumer recomputed it)
-  O-15 second-pass subset/stem → per-url FUSED pair scan: the distinct
-        standard forms of a url are collected into one sorted array and
-        the reference's sequential i<j dict-overwrite loop is replayed as
-        higher-order-function expressions over that array (last write in
-        scan order wins); one-hop application only (the reference does
-        NOT transitively close — :160-162).  Earlier rounds used a per-url
-        rank self-join + max_by(struct(i, j)); the fused form is
-        bit-identical and removes the row_number window sort, both
-        sort-merge-join sorts, and the materialized pair stream — measured
-        on a 100k-page corpus (1.83M map rows): map build 35.8 s → 13.1 s
-        at 8 cores, 74.9 s → 42.0 s at 2 cores, 2→8 scaling efficiency
-        0.52 → 0.80.  Safe per-group state: forms-per-url is bounded by
-        document size (~18 at the reference's chunking), never by corpus
-        size, so the collected arrays stay KB-sized at any scale.
-  O-16 apply mapping           → ONE url join of the folded
-        map<variant,std> column, subject/object resolved by element_at
-        (broadcast under the size cutoff, shuffle join above)
-  O-10 predicate limit, O-18 self-loop filter
+Stage map (SURVEY §2.4), all in ``kgspark.kernels.doc_kg``:
+  O-11 entity extraction       → ``standardize_doc``: lowercased subject
+        and object mentions
+  O-12 normalize-for-blocking  → ``entity_map``: stop-word-free ``\\w``
+        tokens of the variant
+  O-13 blocking                → ``entity_map``: dict keyed by that token
+        string
+  O-14 canonical pick          → ``entity_map``: min over (-count, length,
+        variant) — the reference's stable sort over its (-len, lex) presort
+  O-15 second-pass subset/stem → ``_merges``: the reference's i<j loop over
+        the (length, lexical)-sorted standard forms, last write wins;
+        one-hop application only (the reference does NOT transitively
+        close — :160-162)
+  O-16 apply mapping           → ``standardize_doc``
+  O-10 predicate limit         → ``limit_predicate``
+  O-18 self-loop filter        → ``standardize_doc``
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
-from kgspark.pipeline.exprs import limit_predicate, norm_key, stem_set, word_set
+from kgspark.kernels import doc_kg
+from kgspark.pipeline.perdoc import map_docs
 
-
-def _override_expr(fs):
-    """O-15 second pass as pure array expressions over ``fs`` — each
-    url's distinct standard forms, (len, lex)-sorted, with precomputed
-    word/stem sets.  Returns a ``map<target, std2>`` of the dict
-    overwrites the reference's sequential i<j loop would produce."""
-    n = F.size(fs)
-
-    def _resolve(i, j):
-        # (len,lex) rank order guarantees len(e1) <= len(e2), so the stem
-        # case always remaps e2 → e1 (reference :153-158, sorted order)
-        e1 = F.element_at(fs, i + 1)
-        e2 = F.element_at(fs, j + 1)
-        w1, w2, s1, s2 = e1["ws"], e2["ws"], e1["ss"], e2["ss"]
-        sub12 = (F.size(w1) > 0) & (F.size(F.array_except(w1, w2)) == 0)
-        sub21 = (F.size(w2) > 0) & (F.size(F.array_except(w2, w1)) == 0)
-        shared = F.array_intersect(s1, s2)
-        stem_hit = (F.size(shared) > 0) & (
-            F.size(shared) / F.greatest(F.size(s1), F.size(s2)) > 0.5)
-        return (
-            F.when(sub12, F.struct(e2["form"].alias("target"), e1["form"].alias("std2")))
-            .when(sub21, F.struct(e1["form"].alias("target"), e2["form"].alias("std2")))
-            .when(stem_hit, F.struct(e2["form"].alias("target"), e1["form"].alias("std2")))
-        )
-
-    # all i<j hits in scan order (i-major, j ascending — the reference's
-    # nested-loop order); n==1 guard: sequence(0, -1) would DESCEND
-    pair_hits = F.flatten(F.transform(
-        F.sequence(F.lit(0), n - 2),
-        lambda i: F.filter(
-            F.transform(F.sequence(i + 1, n - 1), lambda j: _resolve(i, j)),
-            lambda x: x.isNotNull())))
-    empty = F.array().cast("array<struct<target:string,std2:string>>")
-    pair_hits = F.when(n >= 2, pair_hits).otherwise(empty)
-
-    # dict-overwrite replay: the LAST write in (i, j) scan order wins ==
-    # first occurrence per target over the REVERSED hit list
-    dedup = F.aggregate(
-        F.reverse(pair_hits), empty,
-        lambda acc, p: F.when(
-            F.exists(acc, lambda a: a["target"] == p["target"]), acc
-        ).otherwise(F.array_append(acc, p)))
-    return F.map_from_entries(
-        F.transform(dedup, lambda p: F.struct(p["target"], p["std2"])))
+_TRIPLE = ("subject", "predicate", "object")
+_STR = T.StringType()
 
 
-def folded_entity_map(triples: DataFrame) -> DataFrame:
-    """(url, _m): the phase-2 variant→standard mapping, ONE
-    ``map<variant, std>`` row per url, built in a single url-ascending
-    aggregation chain — no window, no self-join, no join-back.
-
-    Round-4 shipped the O-15 fused pair scan and the single map-column
-    apply, but the map BUILD still had the multi-consumer recompute
-    hazard those fixes target: the O-14 window output (``map1``) was
-    consumed twice — once through the O-15 forms chain and once as the
-    left side of the override join-back — and under the phase's
-    exchange-free url layout each consumer recomputes the entity
-    aggregation and the window sort from scratch (BENCH.md §2b).  This
-    formulation has no fan-out anywhere:
-
-      ents agg (url, entity) → blocks agg (url, norm): O-14 canonical
-      pick as a struct-ordered ``min_by`` (same total order as the old
-      window: -count, char-len, lexical — entity is unique per block so
-      the order is total) + the block's member list → url agg: forms
-      array (sorted (len, lex), ws/ss precomputed per block row) + block
-      list → O-15 override map (``_override_expr``) applied per variant
-      with ``element_at`` → ``map_from_entries``.
-
-    Every groupBy key is url-prefixed, so the whole chain runs on the
-    single url exchange; measured at 100k pages (2.51M raw triples,
-    tools/profile_standardize.py, noop-written): 20.5 → 12.4 s at 8
-    cores, 66.3 → 37.7 s at 2 cores vs the row build + re-fold it
-    replaces, bit-identical output (test_parity + the
-    kg_standardize_map oracle).
-    Variant keys are unique per url (upstream groupBy(url, entity)),
-    which ``map_from_entries`` enforces."""
-    ents = (
-        triples.select("url", F.explode(
-            F.array(F.lower("subject"), F.lower("object"))).alias("entity"))
-        .groupBy("url", "entity")
-        .agg(F.count("*").alias("cnt"))  # occurrences as subject or object
-    )
-    blocked = ents.withColumn("norm", norm_key(F.col("entity"))).filter(F.col("norm") != "")
-
-    # O-14 canonical pick per (url, norm) block as min_by over the exact
-    # window order (-count, char-len, lexical); collect the block members
-    # alongside — one aggregation replaces the window sort, and no
-    # join-back is ever needed because the members travel with the pick
-    blocks = blocked.groupBy("url", "norm").agg(
-        F.min_by(
-            "entity",
-            F.struct((-F.col("cnt")).alias("nc"), F.length("entity").alias("l"),
-                     F.col("entity").alias("e")),
-        ).alias("std1"),
-        F.collect_list("entity").alias("variants"),
-    )
-
-    # O-15 inputs: per-url sorted forms array.  std1 values are distinct
-    # per url by construction (each is a member of its own block and
-    # blocks partition the url's entities), so no distinct needed; ws/ss
-    # are computed ONCE per block row, before the url-level collect.
-    enr = blocks.select(
-        "url", "variants",
-        F.struct(
-            F.length("std1").alias("l"), F.col("std1").alias("form"),
-            word_set(F.col("std1")).alias("ws"),
-            stem_set(word_set(F.col("std1"))).alias("ss")).alias("f"),
-    )
-    g = enr.groupBy("url").agg(
-        F.array_sort(F.collect_list("f")).alias("fs"),
-        F.collect_list(F.struct(F.col("f.form").alias("std1"), "variants")).alias("bs"),
-    )
-
-    # one-hop application on exact-key match only (reference :160-162):
-    # the override is keyed by the VARIANT string (old formulation joined
-    # extra on variant == target), not by the variant's block pick.
-    # map_zip_with evaluates m0 and ov ONCE per row and merges per key —
-    # an element_at(ov, v) lookup inside the per-variant lambda would
-    # instead inline (CollapseProject) and re-evaluate the whole O-15
-    # pair scan per element.  Every ov key is a standard form, i.e. a
-    # block member, i.e. a variant — so ov keys ⊆ m0 keys and the merge
-    # never invents entries.
-    m0 = F.map_from_entries(F.flatten(F.transform(
-        F.col("bs"),
-        lambda b: F.transform(
-            b["variants"],
-            lambda v: F.struct(v.alias("variant"), b["std1"].alias("std"))),
-    )))
-    ov = _override_expr(F.col("fs"))
-    return g.select(
-        "url",
-        F.map_zip_with(m0, ov, lambda k, v1, v2: F.coalesce(v2, v1)).alias("_m"))
+def _doc_map(rows: list[tuple]) -> list[tuple]:
+    return list(doc_kg.entity_map(
+        [e.lower() for s, o in rows for e in (s, o)]).items())
 
 
 def build_entity_map(triples: DataFrame) -> DataFrame:
-    """(url, variant, std): the variant→standard mapping of phase 2
-    (folded_entity_map exploded back to rows — the row API the driver
-    oracle and tests consume; standardize() uses the folded form
-    directly)."""
-    return folded_entity_map(triples).select(
-        "url", F.explode("_m").alias("variant", "std"))
-
-
-def apply_entity_map(triples: DataFrame, entity_map: DataFrame,
-                     broadcast_map: bool | None = None,
-                     max_broadcast_rows: int = 5_000_000) -> DataFrame:
-    """O-16: rewrite subject/object via the mapping; predicate limit;
-    default chunk 0; drop self-loops (reference :164-186).
-
-    ``broadcast_map=None`` (default) sizes the map with a count and
-    broadcasts only under ``max_broadcast_rows`` (cfg
-    ``broadcast_map_max_rows``): the map is per-url so it grows linearly
-    with the corpus — an unconditional broadcast OOMs at scale.  Above
-    the cutoff the joins shuffle on (url, variant) instead.  The sizing
-    count runs on the UNpersisted frame: the map's lineage is a cheap
-    aggregation over the (already-barriered) triples, and a persist here
-    would leak a cached RDD for the session lifetime, since the output is
-    lazy and there is no hook to unpersist after the caller materializes.
-    """
-    if broadcast_map is None:
-        broadcast_map = entity_map.count() <= max_broadcast_rows
-    # Fold the per-url rows into ONE map<variant, std> row per url and
-    # join ONCE on url, resolving subject and object with element_at
-    # lookups.  vs the previous two (url, variant) equi-joins this (a)
-    # consumes the entity-map subtree ONCE — the map lineage has no
-    # exchange boundary under standardize()'s single-shuffle layout, so
-    # Spark cannot ReusedExchange-dedupe a second consumer and would
-    # recompute the whole map per join (measured: the fused standardize
-    # stage dropped ~495 s → ~250 s of task CPU on a 100k-page corpus);
-    # and (b) replaces two derived-key (url, lower(entity)) sort-merge
-    # sorts of the full triple stream with one url sort.  variant is
-    # unique per (url, variant) by construction (groupBy(url, entity)
-    # upstream), which map_from_entries enforces — a duplicate-key error
-    # here means the map builder broke that invariant.
-    maps = entity_map.groupBy("url").agg(
-        F.map_from_entries(F.collect_list(F.struct("variant", "std"))).alias("_m"))
-    return _apply_folded(triples, maps, broadcast_map)
-
-
-def _apply_folded(triples: DataFrame, maps: DataFrame,
-                  broadcast_map: bool) -> DataFrame:
-    """O-16 application given the already-folded (url, _m) map."""
-    # DataFrame-qualified join refs: maps derives from the same triples
-    # lineage, and an unqualified F.col("_u") can resolve into the other
-    # side of the self-join — Catalyst then folds the condition away and
-    # plans a conditionless BroadcastNestedLoopJoin (a cartesian product)
-    rhs = maps.select(F.col("url").alias("_u"), "_m")
-    m = F.broadcast(rhs) if broadcast_map else rhs
-    out = triples.join(m, triples["url"] == rhs["_u"], "left")
-    keep = [c for c in triples.columns if c not in ("subject", "predicate", "object", "chunk")]
-    return (
-        out.select(
-            *[triples[c] for c in keep],
-            F.coalesce(F.element_at("_m", F.lower(triples["subject"])),
-                       triples["subject"]).alias("subject"),
-            limit_predicate(triples["predicate"]).alias("predicate"),
-            F.coalesce(F.element_at("_m", F.lower(triples["object"])),
-                       triples["object"]).alias("object"),
-            (F.coalesce(triples["chunk"], F.lit(0)) if "chunk" in triples.columns
-             else F.lit(0)).cast("int").alias("chunk"),
-        )
-        .filter(F.col("subject") != F.col("object"))
-    )
+    """(url, variant, std): the per-document variant→standard mapping of
+    phase 2, as rows (the ``kg_standardize_map`` oracle query)."""
+    return map_docs(triples, ["subject", "object"], _doc_map,
+                    [T.StructField("variant", _STR), T.StructField("std", _STR)])
 
 
 def standardize(triples: DataFrame, broadcast_map: bool | None = None,
-                max_broadcast_rows: int = 5_000_000,
-                partition_by_url: bool = True) -> DataFrame:
-    """Full phase 2: build the per-url entity map and apply it.
+                max_broadcast_rows: int = 5_000_000) -> DataFrame:
+    """Full phase 2: map each document's entities to their standard forms,
+    limit predicates, default ``chunk`` to 0, drop self-loops.
 
-    ``partition_by_url`` hash-partitions the input on ``url`` ONCE up
-    front: every phase-2 groupBy / self-join key is url-prefixed, and
-    HashPartitioning(url) satisfies each of their ClusteredDistribution
-    requirements, so Catalyst drops the per-stage exchanges — one
-    shuffle where the naive plan runs ~6 (plan-asserted in tests).  The
-    reference is per-document, so per-url partitioning is also the
-    semantically natural layout.
-
-    Uses folded_entity_map directly (never the exploded row form), so
-    the map subtree is built once and folded zero extra times.  A
-    ``broadcast_map=None`` sizing decision counts total map ENTRIES
-    (sum of per-url map sizes — the same row count the old
-    entity_map.count() measured), one extra job on the undecided path
-    only (the runner always passes a decided flag; plan-asserted)."""
-    if partition_by_url:
-        triples = triples.repartition(F.col("url"))
-    maps = folded_entity_map(triples)
-    if broadcast_map is None:
-        n = maps.select(F.sum(F.size("_m")).alias("n")).first()["n"] or 0
-        broadcast_map = n <= max_broadcast_rows
-    return _apply_folded(triples, maps, broadcast_map)
+    Output: the input's other columns in their order, then subject,
+    predicate, object, chunk (int).  ``broadcast_map`` and
+    ``max_broadcast_rows`` are unused: the mapping never leaves its
+    document, so there is no map to broadcast.  They stay in the
+    signature because ``runner.build_triples`` passes them."""
+    carry = [c for c in triples.columns if c not in ("url", *_TRIPLE)]
+    out = map_docs(triples, _TRIPLE, doc_kg.standardize_doc,
+                   [T.StructField(c, _STR) for c in _TRIPLE], carry=carry)
+    chunk = F.coalesce("chunk", F.lit(0)) if "chunk" in carry else F.lit(0)
+    keep = [c for c in triples.columns if c not in (*_TRIPLE, "chunk")]
+    return out.select(*keep, *_TRIPLE, chunk.cast("int").alias("chunk"))

@@ -16,7 +16,8 @@ TABLES = [
     "lineitem", "events", "documents", "embeddings",
 ]
 SUBSET = [
-    "kg_top_predicates", "kg_standardize_map", "kg_transitive_inference",
+    "kg_top_predicates", "kg_standardize_map", "kg_standardized_triples",
+    "kg_transitive_inference", "kg_lexical_inference", "kg_infer_full",
     "kg_dedup_triples", "kg_connected_components", "doc_chunk_overlap",
     "doc_profile", "doc_gopher", "dedup_pages", "dedup_exact", "dedup_lsh",
     "emb_topk", "mm_decode_meta", "mm_decode_real", "ev_sessionize",

@@ -172,3 +172,44 @@ def test_fused_phase1_equals_modular(spark):
     a = Counter(map(tuple, fused.select(*cols).collect()))
     b = Counter(map(tuple, modular.select(*cols).collect()))
     assert a == b and a
+
+
+# Unicode whitespace: the reference splits words with str.split(), which
+# breaks on U+00A0 / U+3000 as well as ASCII whitespace.
+
+def _phase2_rows(spark, rows):
+    got = standardize(triples_df(spark, rows)).select(
+        "subject", "predicate", "object").collect()
+    want = [(t["subject"], t["predicate"], t["object"])
+            for t in refsem.standardize([dict(r) for r in rows])]
+    return sorted(map(tuple, got)), sorted(want)
+
+
+def test_nbsp_compound_merges_into_its_word(spark):
+    rows = [
+        {"subject": "big\u00a0data", "predicate": "drives", "object": "growth"},
+        {"subject": "data", "predicate": "drives", "object": "insight"},
+    ]
+    got, want = _phase2_rows(spark, rows)
+    assert got == want
+    assert ("data", "drives", "growth") in got
+
+
+def test_ideographic_space_predicate_is_limited(spark):
+    rows = [{"subject": "alice", "predicate": "was\u3000born\u3000in\u3000the",
+             "object": "paris"}]
+    got, want = _phase2_rows(spark, rows)
+    assert got == want == [("alice", "was born", "paris")]
+
+
+def test_nbsp_shared_word_gives_lexical_edge(spark):
+    rows = [
+        {"subject": "river\u00a0bank", "predicate": "floods", "object": "town"},
+        {"subject": "river mouth", "predicate": "meets", "object": "sea"},
+    ]
+    got = {
+        (r["subject"], r["predicate"], r["object"], r["inferred"])
+        for r in infer(triples_df(spark, rows)).collect()
+    }
+    assert got == refsem.canon(refsem.infer([dict(r) for r in rows]))
+    assert ("river mouth", "related to", "river\u00a0bank", True) in got

@@ -2,9 +2,8 @@
 100 TB must be visible in `.explain` output, not just hoped for.
 
 * parquet scans push filters and prune columns
-* the entity-map apply is a broadcast join
-* hot-path expressions stay inside WholeStageCodegen (no Python in
-  phases 2-3)
+* phases 2-3 cross into Python only as Arrow-batched maps over
+  documents, one exchange each
 * the exact-Jaccard pair join is an equi-join on the shingle (no
   nested-loop cross join)
 """
@@ -36,56 +35,6 @@ def test_scan_pushdown_and_pruning(spark):
     assert "l_extendedprice" not in plan.split("ReadSchema")[1].split("\n")[0]
 
 
-def test_entity_map_apply_is_broadcast_join(spark):
-    """Needs a MULTI-url source: on a single-literal-url fixture Catalyst
-    constant-folds the url==url join condition to true and plans a
-    conditionless 1-row BroadcastNestedLoopJoin — semantically fine
-    there, but not the shape a real corpus (varying urls) produces."""
-    from kgspark.pipeline import relational, standardize
-
-    trip = relational.geo_triples(spark, SF)
-    out = standardize.standardize(trip)
-    plan = plan_of(out)
-    assert "BroadcastHashJoin" in plan
-
-
-def test_entity_map_broadcast_cutoff(spark):
-    """broadcast_map_max_rows is live: above the cutoff the map apply
-    must shuffle (no broadcast of a corpus-proportional map — VERDICT r01
-    item 2), below it broadcast; both paths bit-identical.  Multi-url
-    source for the same reason as test_entity_map_apply_is_broadcast_join."""
-    from kgspark.pipeline import relational, standardize
-
-    trip = relational.geo_triples(spark, SF)
-    emap = standardize.build_entity_map(trip)
-
-    small = standardize.apply_entity_map(trip, emap, max_broadcast_rows=10**9)
-    assert "BroadcastHashJoin" in plan_of(small)
-
-    # above the cutoff nothing is forced; Catalyst sizes the join.  On the
-    # tiny fixture its estimate is under autoBroadcastJoinThreshold, so
-    # simulate the at-scale estimate by disabling auto-broadcast.
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        # drop the cached map: its plan was compiled with auto-broadcast on
-        # and CacheManager would substitute it (BroadcastHashJoin nodes
-        # inside the InMemoryRelation) for the fresh build below
-        spark.catalog.clearCache()
-        big = standardize.apply_entity_map(
-            trip, standardize.build_entity_map(trip), max_broadcast_rows=0)
-        plan = plan_of(big)
-        assert "BroadcastHashJoin" not in plan
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-
-    cols = small.columns
-    a = sorted(map(tuple, small.select(*cols).collect()))
-    b = sorted(map(tuple, big.select(*cols).collect()))
-    assert a == b
-
-
 def test_link_map_broadcast_cutoff(spark):
     from kgspark.config import KgConfig
     from kgspark.pipeline import linking, relational
@@ -107,20 +56,25 @@ def test_link_map_broadcast_cutoff(spark):
     assert a == b
 
 
-def test_phases_are_jvm_side(spark):
-    """Phases 2-3 must contain no Python evaluation: the only Python in
-    the engine is the two Arrow kernels of phase 1."""
+def test_phases_plan_python_only_as_map_in_arrow(spark):
+    """Phases 2-3 each run their Python as one Arrow-batched map over
+    batches of documents (MapInArrow), never as row-at-a-time
+    BatchEvalPython, behind at most one exchange (the url aggregation).
+    Each phase is planned over a checkpointed input, as the runner's
+    barriers leave it."""
     from kgspark.pipeline import inference, relational, standardize
 
-    trip = relational.geo_triples(spark, SF)
-    plan = plan_of(inference.infer(standardize.standardize(trip)))
-    # no Python evaluation nodes anywhere in phases 2-3 (an un-executed
-    # AQE plan omits codegen-id annotations, so assert the absence of
-    # Python rather than the presence of codegen markers)
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
-    assert "FlatMapGroupsInPandas" not in plan
-    assert "BroadcastHashJoin" in plan
+    trip = relational.geo_triples(spark, SF).localCheckpoint()
+    std = standardize.standardize(trip)
+    plans = [plan_of(std)]  # before the checkpoint runs it: one plan, not two
+    plans.append(plan_of(inference.infer(std.localCheckpoint())))
+    for plan in plans:
+        tree = plan.split("\n\n")[0]
+        assert "MapInArrow" in tree
+        assert "BatchEvalPython" not in plan
+        assert "ArrowEvalPython" not in plan
+        assert "FlatMapGroupsInPandas" not in plan
+        assert sum(" Exchange " in line for line in tree.splitlines()) <= 1
 
 
 def test_extraction_kernels_are_arrow(spark):
@@ -285,9 +239,10 @@ def test_compact_parquet_refuses_to_flatten_partitioned_dir(spark, tmp_path):
 
 def test_runner_passes_decided_broadcast_flag_no_sizing_count(spark):
     """build_triples must hand standardize() a DECIDED broadcast flag
-    (True/False) derived from the barriered triples count — never None,
-    which would trigger apply_entity_map's mid-plan map-sizing count
-    (one extra job per pipeline invocation)."""
+    (True/False) derived from the barriered triples count — never None.
+    standardize() no longer reads the flag (phase 2 is per document, so
+    there is no map to broadcast); this pins the runner's side of the
+    call, whose sizing count scans the extract barrier and adds no job."""
     from kgspark import datagen
     from kgspark.config import KgConfig
     from kgspark.pipeline import runner, standardize

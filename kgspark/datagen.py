@@ -137,61 +137,3 @@ def write_pages(spark, path: str, n_pages: int, seed: int = 42, partitions: int 
     df = spark.createDataFrame(rows, PAGES_SCHEMA).repartition(partitions)
     df.write.mode("overwrite").parquet(path)
     return path
-
-
-def _rows_for_range(start: int, stop: int, seed: int) -> list[tuple]:
-    """Pages ``start..stop-1`` with a per-page rng — executor-safe.
-
-    Unlike :func:`generate_rows` (one sequential rng, so page i depends on
-    all pages before it), each page seeds its own ``Random((seed, i))``:
-    content is a pure function of (seed, i), so any partitioning of the
-    index range produces byte-identical pages.  Content distribution is
-    the same per-page generator; corpora from the two writers differ only
-    in which rng stream fed each page.
-    """
-    langs = ["en", "zh", "mixed"]
-    rows = []
-    for i in range(start, stop):
-        rng = random.Random((seed << 34) ^ (i * 0x9E3779B97F4A7C15))
-        lang = langs[i % 3]
-        domain = rng.choice(DOMAINS)
-        url = f"https://{domain}/page/{i:08d}"
-        ts = _EPOCH + dt.timedelta(
-            days=365 * (i % 3) + (i * 7) % 360, seconds=(i * 137) % 86400
-        )
-        text = make_doc(rng, lang)
-        html = render_page(text, title=f"doc {i}", lang=lang)
-        rows.append((url, ts.replace(tzinfo=None), html, text, lang))
-    return rows
-
-
-def write_pages_distributed(spark, path: str, n_pages: int, seed: int = 42,
-                            partitions: int = 64):
-    """Corpus writer that scales: generation runs ON THE EXECUTORS.
-
-    ``write_pages`` materializes every row in the driver (fine to ~300k
-    pages, OOMs beyond); this splits the index range into ``partitions``
-    contiguous slices and generates each slice executor-side via
-    mapInPandas, so memory per task is one slice and the writer scales to
-    any corpus size.  Deterministic for a given (seed, n_pages,
-    partitions-independent): pages are keyed by index, not by rng order.
-    """
-    import pandas as pd
-
-    from kgspark.pipeline.ingest import PAGES_SCHEMA
-
-    bounds = [
-        (k * n_pages // partitions, (k + 1) * n_pages // partitions)
-        for k in range(partitions)
-    ]
-    bdf = spark.createDataFrame(bounds, "start long, stop long").repartition(partitions)
-
-    def gen(batches):
-        for pdf in batches:
-            for start, stop in zip(pdf["start"], pdf["stop"]):
-                rows = _rows_for_range(int(start), int(stop), seed)
-                yield pd.DataFrame(
-                    rows, columns=["url", "warc_ts", "html", "text", "lang"])
-
-    bdf.mapInPandas(gen, PAGES_SCHEMA).write.mode("overwrite").parquet(path)
-    return path

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from kgspark.pipeline.exprs import limit_predicate
+from kgspark.kernels import doc_kg
 from kgspark.pipeline.graph import connected_components, degrees
 
 BETWEEN_PRED = "related to"
@@ -95,7 +95,7 @@ def between_community_triples(triples: DataFrame, top_k: int = 5,
         a.join(b, a["i"] < b["j"])
         .select(
             F.col("rep_i").alias("subject"),
-            limit_predicate(F.lit(BETWEEN_PRED)).alias("predicate"),
+            F.lit(doc_kg.limit_predicate(BETWEEN_PRED)).alias("predicate"),
             F.col("rep_j").alias("object"),
             F.lit(True).alias("inferred"),
         )
@@ -137,7 +137,7 @@ def within_community_triples(
         .filter(F.col("rn") <= max_pairs)
         .select(
             F.col("a").alias("subject"),
-            limit_predicate(F.lit(WITHIN_PRED)).alias("predicate"),
+            F.lit(doc_kg.limit_predicate(WITHIN_PRED)).alias("predicate"),
             F.col("b").alias("object"),
             F.lit(True).alias("inferred"),
         )

@@ -12,7 +12,7 @@ strictly increasing in (chunk_id, pos).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from kgspark.kernels.triple_extract import extract_triples
 
@@ -35,6 +35,20 @@ def extract_triples_udf(chunks: pd.Series) -> pd.Series:
                                  for t in extract_triples(c or "")])
 
 
+def _triple_rows(exploded: DataFrame, keep: list[str], chunk: Column,
+                 pos: Column) -> DataFrame:
+    """Output projection shared by both phase-1 paths: (*keep, chunk, seq,
+    subject, predicate, object) with seq = chunk * 2^20 + pos.  The fields
+    pass through as the kernel emits them: ``extract_triples`` already
+    strips each one and drops incomplete triples (reference main.py:79-87)."""
+    return exploded.select(
+        *keep,
+        chunk.alias("chunk"),
+        (chunk.cast("long") * F.lit(_SEQ_BASE) + pos).alias("seq"),
+        "t.subject", "t.predicate", "t.object",
+    )
+
+
 def extract_raw_triples(chunks: DataFrame) -> DataFrame:
     keep = [c for c in chunks.columns if c in ("url", "bucket")]
     exploded = chunks.select(
@@ -42,22 +56,7 @@ def extract_raw_triples(chunks: DataFrame) -> DataFrame:
         F.col("chunk_id"),
         F.posexplode(extract_triples_udf(F.col("chunk_text"))).alias("_pos", "t"),
     )
-    return (
-        exploded.select(
-            *keep,
-            "chunk_id",
-            (F.col("chunk_id").cast("long") * F.lit(_SEQ_BASE) + F.col("_pos")).alias("seq"),
-            F.trim(F.col("t.subject")).alias("subject"),
-            F.trim(F.col("t.predicate")).alias("predicate"),
-            F.trim(F.col("t.object")).alias("object"),
-        )
-        # validation semantics: all three fields required non-empty
-        # (reference main.py:79-87)
-        .filter(
-            (F.col("subject") != "") & (F.col("predicate") != "") & (F.col("object") != "")
-        )
-        .withColumnRenamed("chunk_id", "chunk")
-    )
+    return _triple_rows(exploded, keep, F.col("chunk_id"), F.col("_pos"))
 
 
 _FUSED_T = T.ArrayType(
@@ -113,17 +112,4 @@ def extract_pipeline_fused(pages: DataFrame, chunk_size: int = 100,
     exploded = pages.select(
         *keep, F.explode(fused_udf(F.col(src_col))).alias("t")
     )
-    return (
-        exploded.select(
-            *keep,
-            F.col("t.chunk").alias("chunk"),
-            (F.col("t.chunk").cast("long") * F.lit(_SEQ_BASE)
-             + F.col("t.pos")).alias("seq"),
-            F.trim(F.col("t.subject")).alias("subject"),
-            F.trim(F.col("t.predicate")).alias("predicate"),
-            F.trim(F.col("t.object")).alias("object"),
-        )
-        .filter(
-            (F.col("subject") != "") & (F.col("predicate") != "") & (F.col("object") != "")
-        )
-    )
+    return _triple_rows(exploded, keep, F.col("t.chunk"), F.col("t.pos"))

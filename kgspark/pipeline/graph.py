@@ -487,61 +487,6 @@ def clustering_coefficients(edges: DataFrame, src: str = "src", dst: str = "dst"
     )
 
 
-def label_propagation(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 5,
-    checkpoint_every: int = 3,
-    materialize: str = "localCheckpoint",
-) -> DataFrame:
-    """Community detection by synchronous label propagation — the
-    deterministic stand-in for the reference's Louvain call
-    (visualization.py:186-205, viz-only).  Unlike min-label connected
-    components this CAN split a connected graph into communities: each
-    round every node adopts its neighbors' most frequent label
-    (ties: smallest label), which converges toward dense clusters.
-
-    Deterministic: synchronous updates + lexical tie-break (classic
-    async LPA is run-order dependent; the synchronous variant can
-    oscillate on bipartite structures, so we run a fixed ``max_iter``
-    rather than to convergence — the reference's Louvain is likewise
-    resolution/seed dependent).
-
-    Returns (node, label)."""
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .persist()
-    )
-    labels = (
-        und.select(F.col("a").alias("node")).distinct()
-        .withColumn("label", F.col("node"))
-        .persist()
-    )
-    for it in range(max_iter):
-        votes = (
-            und.join(labels, und["b"] == labels["node"])
-            .groupBy(und["a"].alias("node"), F.col("label"))
-            .agg(F.count("*").alias("n"))
-        )
-        new_labels = votes.groupBy("node").agg(
-            F.min_by(
-                "label",
-                F.struct((-F.col("n")).alias("nn"), F.col("label").alias("l")),
-            ).alias("label")
-        )
-        if (it + 1) % checkpoint_every == 0:
-            new_labels = _lineage_cut(new_labels, materialize)
-        new_labels = new_labels.persist()
-        labels.unpersist()
-        labels = new_labels
-    und.unpersist()
-    return labels
-
-
 def louvain(
     edges: DataFrame,
     src: str = "src",
@@ -551,9 +496,9 @@ def louvain(
     checkpoint_every: int = 3,
     materialize: str = "localCheckpoint",
 ) -> DataFrame:
-    """Deterministic distributed Louvain community detection — the exact
-    modularity-optimizing counterpart of ``label_propagation`` for the
-    reference's ``community.best_partition`` call (visualization.py:190-191,
+    """Deterministic distributed Louvain community detection — the
+    modularity-optimizing counterpart of the reference's
+    ``community.best_partition`` call (visualization.py:190-191,
     viz-only).  Two classic phases per level (Blondel et al. 2008):
 
       1. **Local moves**: every node considers its neighbors' communities

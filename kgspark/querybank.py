@@ -44,7 +44,7 @@ ALL_TRIPLES_SQL = f"""
 _NORM_STOPS = "'the','a','an','of','and','or','in','on','at','to','for','with','by','as'"
 _PRED_STOPS = "'a','an','the','of','with','by','to','from','in','on','for'"
 
-# inline predicate-length limit (exprs.limit_predicate) over a column named
+# inline predicate-length limit (doc_kg.limit_predicate) over a column named
 # ``pred`` — assumes a prior CTE provides ``pw`` = whitespace words of pred
 _LIMIT_PRED_SQL = f"""
     CASE WHEN len(pw) <= 3 THEN pred
@@ -1340,10 +1340,7 @@ def _gopher_sql() -> str:
     (count, gram length, gram) — Spark's max(struct(c,l,g)) — and the
     caps applied to the ROUNDED output values, exactly as gopher_keep
     sees them."""
-    gram_ctes, gram_joins, gram_cols, keep_terms = [], [], [], []
-    caps = {"dup_line_frac": 0.30, "dup_line_char_frac": 0.20,
-            "dup_para_frac": 0.30, "top2_char_frac": 0.20,
-            "top3_char_frac": 0.18, "top4_char_frac": 0.16}
+    gram_ctes, gram_joins, gram_cols = [], [], []
     for n in (2, 3, 4):
         gram_ctes.append(f"""g{n} AS (
         SELECT doc_id, array_to_string(ws[i:i+{n - 1}], ' ') AS g
@@ -1360,12 +1357,11 @@ def _gopher_sql() -> str:
         gram_joins.append(f"LEFT JOIN gt{n} USING (doc_id)")
         gram_cols.append(
             f"round(coalesce(top{n}, 0) * 1.0 / n, 6) AS top{n}_char_frac")
-    for name, cap in caps.items():
-        keep_terms.append(f"{name} <= {cap}")
     gram_ctes_sql = ",\n    ".join(gram_ctes)
     gram_cols_sql = ",\n               ".join(gram_cols)
     gram_joins_sql = " ".join(gram_joins)
-    keep_sql = " AND ".join(keep_terms)
+    keep_sql = " AND ".join(
+        f"{name} <= {cap}" for name, cap in textstats.GOPHER_CAPS.items())
     return f"""
     WITH lined AS (
         SELECT doc_id,

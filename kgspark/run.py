@@ -37,8 +37,7 @@ def _session(master: str | None, shuffle_partitions: int | None):
     from pyspark.sql import SparkSession
 
     from kgspark.session import standard_conf
-    sp = shuffle_partitions or int(
-        os.environ.get("KGSPARK_SHUFFLE_PARTITIONS", "0")) or (os.cpu_count() or 8)
+    sp = shuffle_partitions or os.cpu_count() or 8
     b = SparkSession.builder.appName("kgspark-run")
     for k, v in standard_conf(sp).items():
         b = b.config(k, v)

@@ -18,9 +18,10 @@ TABLES = [
 SUBSET = [
     "kg_top_predicates", "kg_standardize_map", "kg_standardized_triples",
     "kg_transitive_inference", "kg_lexical_inference", "kg_infer_full",
-    "kg_dedup_triples", "kg_connected_components", "doc_chunk_overlap",
-    "doc_profile", "doc_gopher", "dedup_pages", "dedup_exact", "dedup_lsh",
-    "emb_topk", "mm_decode_meta", "mm_decode_real", "ev_sessionize",
+    "kg_dedup_triples", "kg_connected_components", "kg_community_inference",
+    "doc_chunk_overlap", "doc_profile", "doc_gopher", "dedup_pages",
+    "dedup_exact", "dedup_lsh", "emb_topk", "mm_decode_meta", "mm_decode_real",
+    "ev_sessionize",
 ]
 
 

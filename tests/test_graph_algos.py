@@ -194,30 +194,6 @@ def test_node_importance_large_graph_uses_sampled_path(spark):
     assert all(10.0 <= s <= 30.0 + 1e-9 for s in sizes.values())
 
 
-def test_label_propagation_splits_bridged_cliques(spark):
-    """A-16 stand-in: two 5-cliques joined by a single bridge are ONE
-    connected component but TWO label-propagation communities —
-    the property min-label CC cannot deliver (VERDICT r01 item 7)."""
-    from kgspark.pipeline.graph import connected_components, label_propagation
-
-    a = [f"a{i}" for i in range(1, 6)]
-    b = [f"b{i}" for i in range(1, 6)]
-    edges = [(x, y) for i, x in enumerate(a) for y in a[i + 1:]]
-    edges += [(x, y) for i, x in enumerate(b) for y in b[i + 1:]]
-    edges.append(("a1", "b1"))  # bridge
-    df = spark.createDataFrame(edges, "src string, dst string")
-
-    cc = connected_components(df)
-    assert cc.select("component").distinct().count() == 1
-
-    lab = {r.node: r.label for r in label_propagation(df, max_iter=5).collect()}
-    assert {lab[x] for x in a} == {"a1"}
-    assert {lab[x] for x in b} == {"b1"}
-
-    again = {r.node: r.label for r in label_propagation(df, max_iter=5).collect()}
-    assert lab == again
-
-
 def test_star_cc_equals_minlabel_cc(spark):
     """Large-star/small-star CC must produce exactly the min-label
     component assignment on chains (worst case for label propagation),
@@ -262,20 +238,12 @@ def test_cc_materialize_persist_identical(spark, edges_df):
         assert got == base, algo.__name__
 
 
-def test_eig_lpa_materialize_persist_identical(spark, edges_df):
+def test_eig_materialize_persist_identical(spark, edges_df):
     got_lc = {r.node: r.centrality for r in eigenvector_centrality(
         edges_df, max_iter=30, tol=None).collect()}
     got_p = {r.node: r.centrality for r in eigenvector_centrality(
         edges_df, max_iter=30, tol=None, materialize="persist").collect()}
     assert got_p == pytest.approx(got_lc)
-
-    from kgspark.pipeline.graph import label_propagation
-    lab_lc = {r.node: r.label
-              for r in label_propagation(edges_df, max_iter=4).collect()}
-    lab_p = {r.node: r.label
-             for r in label_propagation(
-                 edges_df, max_iter=4, materialize="persist").collect()}
-    assert lab_p == lab_lc
 
 
 def test_star_cc_fallback_on_nonconvergence(spark):

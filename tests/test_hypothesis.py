@@ -16,10 +16,11 @@ import json
 import pytest
 
 hyp = pytest.importorskip("hypothesis")
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from kgspark.kernels.json_recovery import extract_json_from_text
 from kgspark.kernels.textproc import chunk_text, count_words, split_sentences
+from kgspark.kernels.triple_extract import EN_RELATIONS, ZH_RELATIONS, extract_triples
 
 # -- text strategies: Latin words, CJK runs, sentence enders, whitespace --
 
@@ -59,6 +60,34 @@ def test_count_words_decomposition(text):
     cjk = len(re.findall(r"[一-鿿]", text))
     assert count_words(text) == len(text.split()) + cjk
     assert count_words(text + " x") == count_words(text) + 1
+
+
+# -- extraction inputs: relation words amid ASCII / U+00A0 / U+3000 padding --
+
+_ws = st.sampled_from(["", " ", "  ", "\t", "\n", "\r\n", "\u00a0", "\u3000",
+                       " \u00a0\u3000 "])
+_token = st.one_of(
+    st.sampled_from(EN_RELATIONS + ZH_RELATIONS),
+    st.sampled_from(["Alpha", "beta", "the", "an", "engine", "steam engine",
+                     "香港", "政府", "经济", "的", ",", "，", "."]),
+    _latin, _cjk, _enders,
+)
+padded_texts = st.tuples(
+    _ws, st.lists(st.tuples(_token, _ws), max_size=25), _ws,
+).map(lambda t: t[0] + "".join(a + b for a, b in t[1]) + t[2])
+
+
+@given(padded_texts)
+@example("\u3000Alpha\u00a0supports\u3000the engine.\u00a0")
+@example("\u00a0香港政府\u3000支持\u00a0经济。\u3000")
+@settings(max_examples=300, deadline=None)
+def test_extracted_triples_are_stripped_and_complete(text):
+    """The phase-1 Spark projections rely on the kernel alone for the
+    reference's validation (main.py:79-87): every emitted triple has three
+    non-empty fields, each equal to its own ``.strip()``."""
+    for t in extract_triples(text):
+        for f in ("subject", "predicate", "object"):
+            assert t[f] and t[f] == t[f].strip(), (f, t)
 
 
 _triple_objs = st.lists(

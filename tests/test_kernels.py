@@ -6,7 +6,12 @@ import random
 
 from kgspark.datagen import generate_rows, make_doc
 from kgspark.kernels.html_extract import extract_text, render_page
-from kgspark.kernels.textproc import chunk_text, count_words, split_sentences
+from kgspark.kernels.textproc import (
+    chunk_text,
+    count_words,
+    normalize_text,
+    split_sentences,
+)
 from kgspark.kernels.triple_extract import extract_triples
 
 
@@ -24,6 +29,36 @@ class TestSentenceSplit:
     def test_quote_terminated(self):
         # rule 4: ender+quote followed by non-punctuation splits
         assert split_sentences('he said "stop!" and left。') == ['he said "stop!"', 'and left。']
+
+
+class TestNormalizeText:
+    """O-4, reference text_utils.py:89-117; expected values worked by hand."""
+
+    def test_line_breaks_and_whitespace_collapse(self):
+        # CR/LF runs fold to one newline, which the \s+ pass makes a space
+        assert normalize_text("a\r\n\r\nb\rc\nd") == "a b c d"
+        assert normalize_text("  a \t\t b\u3000 c  ") == "a b c"
+
+    def test_zero_width_strip(self):
+        assert normalize_text("a\u200bb\ufeffc") == "abc"
+        # stripped after the collapse, so the spaces around it both stay
+        assert normalize_text("a \u200b b") == "a  b"
+
+    def test_ellipsis_runs(self):
+        assert normalize_text("wait....go") == "wait...go"
+        assert normalize_text("so......") == "so..."
+
+    def test_space_after_sentence_enders(self):
+        assert normalize_text("好。他") == "好。 他"
+        assert normalize_text("hi!there") == "hi! there"
+        assert normalize_text("why?now") == "why? now"
+        # an existing space is kept single; a following quote gets none
+        assert normalize_text("ok?   then") == "ok? then"
+        assert normalize_text('done。"x') == 'done。"x'
+
+    def test_empty(self):
+        assert normalize_text("") == ""
+        assert normalize_text(" \r\n\t ") == ""
 
 
 class TestCountWords:

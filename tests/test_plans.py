@@ -89,9 +89,11 @@ def test_extraction_kernels_are_arrow(spark):
         )
     )
     raw = extraction.extract_raw_triples(chunking.chunk_pages(pages, 100, 20))
-    plan = plan_of(raw)
-    assert "ArrowEvalPython" in plan
-    assert "BatchEvalPython" not in plan
+    fused = extraction.extract_pipeline_fused(pages, 100, 20)
+    for name, df in (("modular", raw), ("fused", fused)):
+        plan = plan_of(df)
+        assert "ArrowEvalPython" in plan, name
+        assert "BatchEvalPython" not in plan, name
 
 
 def test_jaccard_join_is_equi_not_cross(spark):

@@ -1,11 +1,16 @@
 """Text-analysis operators: language-ID, quality scoring, token counting,
-document fingerprinting.  All pure JVM column expressions (whole-stage
-codegen; SQL-oracle-replayable) — no Python in the hot path.
+document fingerprinting, Gopher repetition signals.  All are JVM column
+expressions (whole-stage codegen; SQL-oracle-replayable) except the
+repetition signals, whose per-document counters run as one Arrow-batched
+UDF over ``kernels.doc_quality``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+import pandas as pd
+from pyspark.sql import Column, DataFrame, functions as F, types as T
+
+from kgspark.kernels.doc_quality import repetition_signals_doc
 
 # tiny per-language function-word lexicons for the stopword-vote heuristic
 LANG_LEXICONS: dict[str, list[str]] = {
@@ -124,8 +129,9 @@ GOPHER_CAPS: dict[str, float] = {
 
 def repetition_signals(df: DataFrame, id_col: str, text_col: str,
                        ngram_ns: tuple[int, ...] = (2, 3, 4)) -> DataFrame:
-    """Gopher/RefinedWeb repetition quality signals, one row per doc:
+    """Gopher/RefinedWeb repetition quality signals, one row per input row:
 
+      n_words             whitespace word count
       dup_line_frac       repeated line occurrences / total lines
       dup_line_char_frac  chars in repeat occurrences (beyond each
                           line's first) / total line chars
@@ -138,94 +144,25 @@ def repetition_signals(df: DataFrame, id_col: str, text_col: str,
     are the classic pre-training poison these caps filter (see
     GOPHER_CAPS / ``gopher_keep``).
 
-    Scale shape: each signal family is explode → groupBy(id, token) →
-    groupBy(id) — partial aggregation combines map-side, keys carry the
-    doc id so nothing is corpus-global; no Python, no windows.  Empty
-    docs yield zeros.
+    Scale shape: one Arrow-batched UDF running the per-document kernel
+    ``kernels.doc_quality.repetition_signals_doc`` — the text crosses the
+    JVM/Python boundary once, with no exchange.  Null and empty texts
+    yield zeros.
     """
-    base = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-    doc_chars = base.select(
-        "_id", F.greatest(F.length("_text"), F.lit(1)).alias("_n"),
-        F.coalesce(
-            F.size(F.filter(F.split("_text", r"\s+"), lambda w: w != "")),
-            F.lit(0),
-        ).alias("_nw"),
-    )
+    names = ["n_words", "dup_line_frac", "dup_line_char_frac",
+             "dup_para_frac", *[f"top{n}_char_frac" for n in ngram_ns]]
+    schema = T.StructType(
+        [T.StructField("n_words", T.IntegerType())]
+        + [T.StructField(c, T.DoubleType()) for c in names[1:]])
 
-    def _dup_frac(split_pat: str, out_frac: str, out_char_frac: str | None):
-        toks = base.select(
-            "_id",
-            F.explode(
-                F.filter(
-                    F.transform(F.split("_text", split_pat), lambda l: F.trim(l)),
-                    lambda l: l != "",
-                )
-            ).alias("tok"),
-        )
-        per_tok = toks.groupBy("_id", "tok").agg(F.count("*").alias("c"))
-        aggs = [
-            F.round(
-                F.sum(F.col("c") - 1) / F.greatest(F.sum("c"), F.lit(1)), 6
-            ).alias(out_frac)
-        ]
-        if out_char_frac:
-            aggs.append(
-                F.round(
-                    F.sum((F.col("c") - 1) * F.length("tok"))
-                    / F.greatest(F.sum(F.col("c") * F.length("tok")), F.lit(1)),
-                    6,
-                ).alias(out_char_frac)
-            )
-        return per_tok.groupBy("_id").agg(*aggs)
+    @F.pandas_udf(schema)
+    def signals(text: pd.Series) -> pd.DataFrame:
+        return pd.DataFrame([repetition_signals_doc(t, ngram_ns) for t in text],
+                            columns=names)
 
-    out = doc_chars.join(
-        _dup_frac(r"\n", "dup_line_frac", "dup_line_char_frac"), "_id", "left"
-    ).join(_dup_frac(r"\n\s*\n", "dup_para_frac", None), "_id", "left")
-
-    words = F.filter(F.split(F.lower("_text"), r"\s+"), lambda w: w != "")
-    for n in ngram_ns:
-        grams = base.select(
-            "_id",
-            F.explode(
-                F.when(
-                    F.size(words) >= n,
-                    F.transform(
-                        F.sequence(F.lit(1), F.size(words) - (n - 1)),
-                        lambda i: F.array_join(F.slice(words, i, n), " "),
-                    ),
-                ).otherwise(F.array().cast("array<string>"))
-            ).alias("g"),
-        )
-        # argmax by (count, gram length, gram) — deterministic tie-break
-        top = (
-            grams.groupBy("_id", "g").agg(F.count("*").alias("c"))
-            .groupBy("_id")
-            .agg(
-                F.max(
-                    F.struct(
-                        F.col("c"), F.length("g").alias("l"), F.col("g")
-                    )
-                ).alias("t")
-            )
-            .select("_id", (F.col("t.c") * F.col("t.l")).alias(f"_top{n}"))
-        )
-        out = out.join(top, "_id", "left")
-
-    sel = [
-        F.col("_id").alias(id_col),
-        F.col("_nw").alias("n_words"),
-        *[
-            F.coalesce(c, F.lit(0.0)).alias(c)
-            for c in ("dup_line_frac", "dup_line_char_frac", "dup_para_frac")
-        ],
-        *[
-            F.round(
-                F.coalesce(F.col(f"_top{n}"), F.lit(0)) / F.col("_n"), 6
-            ).alias(f"top{n}_char_frac")
-            for n in ngram_ns
-        ],
-    ]
-    return out.select(*sel)
+    return df.select(
+        F.col(id_col), signals(F.col(text_col)).alias("_sig")
+    ).select(id_col, *[F.col("_sig")[c].alias(c) for c in names])
 
 
 def gopher_keep(caps: dict[str, float] | None = None,

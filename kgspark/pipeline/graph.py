@@ -53,6 +53,23 @@ def _lineage_cut(df: DataFrame, strategy: str) -> DataFrame:
     raise ValueError(f"unknown materialize strategy: {strategy!r}")
 
 
+def _cut_input(edges: DataFrame, materialize: str) -> DataFrame:
+    """Cut the projected input edges once, before the loops fan them out.
+
+    Both CC variants read their input twice (the two edge directions),
+    and every round embeds the edge set's logical plan, so an uncut
+    input re-runs the caller's whole lineage (e.g. the LSH self-join
+    and its verifier) per read, and a complex caller plan (the
+    incremental-CC subgraph) pays Catalyst re-analysis per round —
+    measured 28 s of driver time on a 3k-edge subgraph whose plan
+    multiplied ~64x into the first round.  ``"persist"`` only truncates
+    the plan, so its cut is also cached."""
+    if materialize == "none":
+        return edges
+    edges = _lineage_cut(edges, materialize)
+    return edges.persist() if materialize == "persist" else edges
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -72,20 +89,14 @@ def connected_components(
     converge in O(diameter) rounds anyway — batching the check halves
     the job count at the cost of at most (k-1) no-op propagation rounds."""
     kcols = [key] if key else []
+    inp = _cut_input(
+        edges.select(*kcols, F.col(src).alias("a"), F.col(dst).alias("b")),
+        materialize)
     und = (
-        edges.select(*kcols, F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(*kcols, F.col(dst).alias("a"), F.col(src).alias("b")))
+        inp.union(inp.select(*kcols, F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
+        .persist()
     )
-    # cut the INPUT lineage once before looping: every round embeds
-    # und's logical plan into the propagate join, so a caller handing
-    # in a complex join tree (e.g. the incremental-CC subgraph) would
-    # otherwise pay Catalyst re-analysis of that tree per round —
-    # measured 28 s of driver time on a 3k-edge subgraph whose plan
-    # multiplied ~64× into the first round
-    if materialize != "none":
-        und = _lineage_cut(und, materialize)
-    und = und.persist()
     # the label table's key is aliased (_lk): labels derive from und, and
     # joining two lineages of the same column is ambiguous in Spark
     lkcols = ["_lk"] if key else []
@@ -129,6 +140,7 @@ def connected_components(
         if changed == 0:
             break
     und.unpersist()
+    inp.unpersist()
     if key:
         labels = labels.withColumnRenamed("_lk", key)
     return labels
@@ -160,20 +172,14 @@ def connected_components_star(
     several-fold, so lineage must be cut every round (measured 4.5×
     wall-clock at cadence 2).
     """
+    inp = _cut_input(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")), materialize)
     e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        inp.filter(F.col("u") != F.col("v"))
+        .union(inp.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
+        .persist()
     )
-    # cut the INPUT lineage before looping: the double-star round
-    # references its input ~8× per star, so a complex caller plan
-    # (incremental-CC subgraph) multiplies ~64× into round one and
-    # stalls Catalyst analysis for tens of seconds (rounds 2+ start
-    # from the per-round cut and were never affected)
-    if materialize != "none":
-        e = _lineage_cut(e, materialize)
-    e = e.persist()
     all_nodes = e.select(F.col("u").alias("node")).distinct().persist()
 
     def star(cur: DataFrame, large: bool) -> DataFrame:
@@ -238,16 +244,22 @@ def connected_components_star(
             cur.unpersist()
         e.unpersist()
         all_nodes.unpersist()
-        return connected_components(
-            edges, src=src, dst=dst, max_iter=max(max_iter * 3, 60),
+        labels = connected_components(
+            inp, src="u", dst="v", max_iter=max(max_iter * 3, 60),
             materialize=materialize)
+        inp.unpersist()
+        return labels
     # stars: (child, root); roots and isolated-in-star nodes map to themselves
     labels = cur.select(F.col("u").alias("node"), F.col("v").alias("component"))
     out = (
         all_nodes.join(labels, "node", "left")
         .select("node", F.coalesce("component", F.col("node")).alias("component"))
     )
+    # the returned frame is lazy: fill all_nodes while e is cached, so
+    # the caller's action does not re-derive e from the input
+    all_nodes.count()
     e.unpersist()
+    inp.unpersist()
     return out
 
 

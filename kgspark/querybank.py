@@ -1321,7 +1321,8 @@ def q_doc_gopher(spark, sf):
     .repetition_signals/gopher_keep): per-doc dup-line/para fractions,
     top-n-gram char coverage, and the keep flag under the production
     caps + 50-word exemption.  VERDICT r4 item 1: previously
-    pytest-only; the explode→groupBy shape is directly SQL-replayable."""
+    pytest-only.  The oracle replays the definitions in SQL
+    (explode→group), independently of the per-document Arrow kernel."""
     from kgspark.ops.textstats import gopher_keep, repetition_signals
     docs = _docs_with_lines(spark, sf)
     sig = repetition_signals(docs, "doc_id", "text")
@@ -1337,7 +1338,7 @@ def q_doc_gopher(spark, sf):
 def _gopher_sql() -> str:
     """DuckDB replay of repetition_signals + gopher_keep over the same
     re-lined corpus: per-token explode→group fractions, per-n argmax by
-    (count, gram length, gram) — Spark's max(struct(c,l,g)) — and the
+    (count, gram length, gram) — the kernel's tie-break — and the
     caps applied to the ROUNDED output values, exactly as gopher_keep
     sees them."""
     gram_ctes, gram_joins, gram_cols = [], [], []

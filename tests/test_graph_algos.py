@@ -238,6 +238,33 @@ def test_cc_materialize_persist_identical(spark, edges_df):
         assert got == base, algo.__name__
 
 
+@pytest.mark.parametrize("materialize", ["localCheckpoint", "persist"])
+def test_cc_evaluates_input_once(spark, edges_df, materialize):
+    """Both CC variants read their input edges in two directions; the
+    input lineage (in the pipeline, the LSH self-join and its verifier)
+    must still run once per row, not once per direction or round.  An
+    accumulator in a UDF of the edge lineage counts the evaluations."""
+    from pyspark.sql import functions as F
+
+    from kgspark.pipeline.graph import connected_components_star
+
+    want = {(r.node, r.component)
+            for r in connected_components(edges_df).collect()}
+    for algo in (connected_components, connected_components_star):
+        seen = spark.sparkContext.accumulator(0)
+
+        def count(v):
+            seen.add(1)
+            return v
+
+        tagged = edges_df.select(
+            F.udf(count, "string")("src").alias("src"), "dst")
+        got = {(r.node, r.component)
+               for r in algo(tagged, materialize=materialize).collect()}
+        assert got == want, algo.__name__
+        assert seen.value == len(EDGES), (algo.__name__, seen.value)
+
+
 def test_eig_materialize_persist_identical(spark, edges_df):
     got_lc = {r.node: r.centrality for r in eigenvector_centrality(
         edges_df, max_iter=30, tol=None).collect()}

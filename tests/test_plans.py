@@ -4,6 +4,7 @@
 * parquet scans push filters and prune columns
 * phases 2-3 cross into Python only as Arrow-batched maps over
   documents, one exchange each
+* the Gopher gate is one Arrow-batched UDF pass with no exchange
 * the exact-Jaccard pair join is an equi-join on the shingle (no
   nested-loop cross join)
 """
@@ -94,6 +95,28 @@ def test_extraction_kernels_are_arrow(spark):
         plan = plan_of(df)
         assert "ArrowEvalPython" in plan, name
         assert "BatchEvalPython" not in plan, name
+
+
+def test_gopher_gate_is_one_arrow_pass(spark):
+    """The Gopher repetition gate runs its per-document counters as ONE
+    Arrow-batched UDF with no exchange (it used to be five
+    explode/groupBy families and five joins), and the pipeline that
+    applies it stays free of row-at-a-time Python."""
+    from kgspark import datagen
+    from kgspark.config import KgConfig
+    from kgspark.ops import textstats
+    from kgspark.pipeline.ingest import PAGES_SCHEMA
+    from kgspark.pipeline.runner import build_triples
+
+    pages = spark.createDataFrame(datagen.generate_rows(4, seed=1), PAGES_SCHEMA)
+    plan = plan_of(textstats.repetition_signals(pages, "url", "text"))
+    tree = plan.split("\n\n")[0]
+    assert sum("ArrowEvalPython" in line for line in tree.splitlines()) == 1
+    assert "Exchange" not in plan
+    assert "BatchEvalPython" not in plan
+    gated = build_triples(pages, KgConfig(quality_filter_enabled=True),
+                          materialize=False)
+    assert "BatchEvalPython" not in plan_of(gated)
 
 
 def test_jaccard_join_is_equi_not_cross(spark):

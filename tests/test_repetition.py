@@ -1,5 +1,7 @@
-"""Gopher repetition signals: exact parity vs a pure-Python
-recomputation of the same definitions, plus filter behavior."""
+"""Gopher repetition signals: the per-document kernel against
+hand-computed values in Spark's string semantics, exact parity of the
+Spark operator vs a pure-Python recomputation of the same definitions,
+plus filter behavior."""
 
 from __future__ import annotations
 
@@ -7,6 +9,7 @@ import re
 
 import pytest
 
+from kgspark.kernels.doc_quality import repetition_signals_doc, round6
 from kgspark.ops import textstats
 
 
@@ -67,6 +70,62 @@ def _py_signals(text: str) -> dict[str, float]:
         top = max(counts, key=lambda g: (counts[g], len(g), g))
         out[f"top{n}_char_frac"] = round(counts[top] * len(top) / n_chars, 6)
     return out
+
+
+ZEROS = (0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
+
+
+def test_kernel_splits_on_java_whitespace_only():
+    # \x0b (vertical tab) is Java \s: it splits words and can blank a
+    # paragraph-separating line
+    assert repetition_signals_doc("a\x0bb c")[0] == 3
+    assert repetition_signals_doc("p1\n\x0b\np1")[3] == 0.5
+    # U+00A0 and U+3000 are Python whitespace but not Java \s
+    assert repetition_signals_doc("a\u00a0b c\u3000d")[0] == 2
+    assert repetition_signals_doc("p1\n\u3000\np1")[3] == 0.0
+
+
+def test_kernel_trims_only_spaces():
+    # trim strips U+0020 only: the tab-indented (or CR-terminated) copy
+    # is a different line, the space-padded copy is the same line
+    assert repetition_signals_doc("buy now\n\tbuy now")[1:3] == (0.0, 0.0)
+    assert repetition_signals_doc("buy now\r\nbuy now")[1:3] == (0.0, 0.0)
+    assert repetition_signals_doc("buy now\n  buy now ")[1:3] == (0.5, 0.5)
+
+
+def test_kernel_rounds_half_up_like_spark():
+    # 127 distinct lines plus one repeat: 1/128 = 0.0078125 exactly;
+    # Spark round(x, 6) gives 0.007813, Python round() gives 0.007812
+    text = "\n".join([f"l{j}" for j in range(127)] + ["l0"])
+    assert round(1 / 128, 6) == 0.007812
+    assert round6(1 / 128) == 0.007813
+    assert repetition_signals_doc(text)[1] == 0.007813
+
+
+def test_kernel_empty_and_null_text():
+    assert repetition_signals_doc(None) == ZEROS
+    assert repetition_signals_doc("") == ZEROS
+    assert repetition_signals_doc(" \n\n ") == ZEROS
+    assert repetition_signals_doc(None, (2,)) == (0, 0.0, 0.0, 0.0, 0.0)
+
+
+def test_kernel_ngram_argmax_by_count_then_length():
+    # count wins over covered chars: "a b" x3 (3 chars) beats
+    # "ccccc ddddd" x2 (11 chars) -> 3*3 / 35
+    t = "a b a b a b ccccc ddddd ccccc ddddd"
+    assert repetition_signals_doc(t, (2,))[4] == round6(9 / 35) == 0.257143
+    # equal counts: the longer gram wins -> "cc dd" x2 = 10 / 19 chars
+    t = "a b a b cc dd cc dd"
+    assert repetition_signals_doc(t, (2,))[4] == 0.526316
+    # equal count and length: the lexical pick covers the same chars
+    assert repetition_signals_doc("a b a b c d c d", (2,))[4] == round6(6 / 15)
+
+
+def test_kernel_counts_code_points_and_lowercases():
+    # lengths in code points; n-grams over lowercased words
+    t = "Σίσυφος ΣΊΣΥΦΟΣ"
+    n_chars = len(t)
+    assert repetition_signals_doc(t, (1,))[4] == round6(2 * 7 / n_chars)
 
 
 def test_repetition_signals_match_pure_python(spark):

@@ -238,17 +238,3 @@ def extract_triples(
         if s and p and o:
             valid.append({"subject": s, "predicate": p, "object": o})
     return valid
-
-
-def detect_mentions(chunk: str) -> list[str]:
-    """Batched mention detection: candidate entity mentions per chunk.
-
-    English: capitalized word runs (≤4 words, sentence-initial word kept
-    only if it recurs capitalized elsewhere is NOT checked — deterministic
-    simple rule).  Chinese: maximal CJK runs of length 2-8.
-    """
-    if not chunk:
-        return []
-    mentions = re.findall(r"(?:[A-Z][\w-]*)(?:\s+[A-Z][\w-]*){0,3}", chunk)
-    mentions += [m for m in re.findall(r"[一-鿿]{2,8}", chunk)]
-    return mentions

@@ -4,8 +4,11 @@ Connected components via min-label propagation (GraphFrames-style) —
 reference analog: recursive DFS at entity_standardization.py:280-319
 (stack-bound, single-machine).  Ours is the standard large-graph
 formulation: labels converge to the component minimum in O(diameter)
-join+agg rounds, with ``localCheckpoint`` every few rounds to cut lineage
-(SURVEY §4 "iterative CC at scale").
+join+agg rounds (SURVEY §4 "iterative CC at scale").
+
+Every iterative loop cuts lineage one way, an eager ``localCheckpoint``
+at a fixed per-algorithm cadence: uncut, each round's self-join multiplies
+the logical plan until Catalyst analysis dominates or OOMs the driver.
 
 Edges may carry an optional group key column (e.g. ``url``) so components
 are computed per group in one job.
@@ -16,44 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def _lineage_cut(df: DataFrame, strategy: str) -> DataFrame:
-    """Periodic lineage barrier for the iterative loops, mirroring
-    ``runner.build_triples(materialize=)``:
-
-      * ``"localCheckpoint"`` — eager executor-local checkpoint:
-        truncates per-round plan growth, but checkpointed blocks die
-        with their executor (the single-JVM/local default).
-      * ``"checkpoint"`` — eager reliable checkpoint to the directory
-        set via ``spark.sparkContext.setCheckpointDir`` (HDFS/S3 on a
-        real cluster): blocks survive executor loss at the price of a
-        distributed write per cut.
-      * ``"persist"`` — the cluster-safe middle ground (GraphFrames'
-        ``AggregateMessages.getCachedDataFrame`` pattern): rebuild the
-        DataFrame from the physical plan's RDD, truncating the Catalyst
-        plan — the loop's self-union/self-join otherwise multiplies the
-        logical tree per round until the analyzer's DeduplicateRelations
-        copy-out OOMs the driver — while keeping RDD-level lineage, so
-        blocks lost with an executor are recomputed (the loop persists
-        each iterate; recomputation walks the RDD chain back to source).
-      * ``"none"`` — no truncation: tiny graphs / few rounds only (the
-        logical plan grows multiplicatively with iterations).
-    """
-    if strategy == "localCheckpoint":
-        return df.localCheckpoint(eager=True)
-    if strategy == "checkpoint":
-        return df.checkpoint(eager=True)
-    if strategy == "persist":
-        jdf = df._jdf
-        spark = df.sparkSession
-        jdf2 = spark._jsparkSession.internalCreateDataFrame(
-            jdf.queryExecution().toRdd(), jdf.schema(), False)
-        return DataFrame(jdf2, spark)
-    if strategy == "none":
-        return df
-    raise ValueError(f"unknown materialize strategy: {strategy!r}")
-
-
-def _cut_input(edges: DataFrame, materialize: str) -> DataFrame:
+def _cut_input(edges: DataFrame) -> DataFrame:
     """Cut the projected input edges once, before the loops fan them out.
 
     Both CC variants read their input twice (the two edge directions),
@@ -62,12 +28,8 @@ def _cut_input(edges: DataFrame, materialize: str) -> DataFrame:
     and its verifier) per read, and a complex caller plan (the
     incremental-CC subgraph) pays Catalyst re-analysis per round —
     measured 28 s of driver time on a 3k-edge subgraph whose plan
-    multiplied ~64x into the first round.  ``"persist"`` only truncates
-    the plan, so its cut is also cached."""
-    if materialize == "none":
-        return edges
-    edges = _lineage_cut(edges, materialize)
-    return edges.persist() if materialize == "persist" else edges
+    multiplied ~64x into the first round."""
+    return edges.localCheckpoint(eager=True)
 
 
 def connected_components(
@@ -76,22 +38,19 @@ def connected_components(
     dst: str = "dst",
     key: str | None = None,
     max_iter: int = 30,
-    checkpoint_every: int = 3,
-    check_convergence_every: int = 2,
-    materialize: str = "localCheckpoint",
 ) -> DataFrame:
     """Return (key?, node, component); component = min label in the
     (undirected) component — the reference DFS also follows both edge
     directions (entity_standardization.py:303-310).
 
-    Convergence is tested only every ``check_convergence_every`` rounds:
-    the change-detection join is a full extra job per round, and labels
-    converge in O(diameter) rounds anyway — batching the check halves
-    the job count at the cost of at most (k-1) no-op propagation rounds."""
+    Lineage is cut every 3 rounds.  Convergence is tested only every 2
+    rounds: the change-detection join is a full extra job per round, and
+    labels converge in O(diameter) rounds anyway — batching the check
+    halves the job count at the cost of at most one no-op propagation
+    round."""
     kcols = [key] if key else []
     inp = _cut_input(
-        edges.select(*kcols, F.col(src).alias("a"), F.col(dst).alias("b")),
-        materialize)
+        edges.select(*kcols, F.col(src).alias("a"), F.col(dst).alias("b")))
     und = (
         inp.union(inp.select(*kcols, F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
@@ -123,11 +82,11 @@ def connected_components(
             .groupBy(*lkcols, "node")
             .agg(F.min("component").alias("component"))
         )
-        if (it + 1) % checkpoint_every == 0:
-            new_labels = _lineage_cut(new_labels, materialize)
+        if (it + 1) % 3 == 0:
+            new_labels = new_labels.localCheckpoint(eager=True)
         new_labels = new_labels.persist()
         changed = 1
-        if (it + 1) % check_convergence_every == 0 or it == max_iter - 1:
+        if (it + 1) % 2 == 0 or it == max_iter - 1:
             changed = (
                 new_labels.withColumnRenamed("component", "c_new")
                 .join(labels, [*lkcols, "node"])
@@ -140,7 +99,6 @@ def connected_components(
         if changed == 0:
             break
     und.unpersist()
-    inp.unpersist()
     if key:
         labels = labels.withColumnRenamed("_lk", key)
     return labels
@@ -151,8 +109,6 @@ def connected_components_star(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 20,
-    checkpoint_every: int = 1,
-    materialize: str = "localCheckpoint",
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
@@ -168,12 +124,10 @@ def connected_components_star(
 
     Convergence detection: the (count, xxhash-sum) signature of the edge
     set — one cheap single-row action per round instead of a set diff.
-    ``checkpoint_every=1``: each double-star round multiplies the plan
-    several-fold, so lineage must be cut every round (measured 4.5×
-    wall-clock at cadence 2).
+    Lineage is cut every round: each double-star round multiplies the
+    plan several-fold (measured 4.5× wall-clock at a cut every 2 rounds).
     """
-    inp = _cut_input(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")), materialize)
+    inp = _cut_input(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
     e = (
         inp.filter(F.col("u") != F.col("v"))
         .union(inp.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -209,13 +163,11 @@ def connected_components_star(
     prev_sig = None
     sig = None
     converged = False
-    for it in range(max_iter):
+    for _ in range(max_iter):
         prev_cur = cur
         cur = star(star(cur, large=True), large=False)
-        if (it + 1) % checkpoint_every == 0:
-            cur = _lineage_cut(cur, materialize)
-        cur = cur.persist()
-        sig = signature(cur)  # materializes cur (post-cut, independent)
+        cur = cur.localCheckpoint(eager=True).persist()
+        sig = signature(cur)  # fills cur's cache (post-cut, independent)
         if prev_cur is not e:
             # release the superseded iterate NOW — leaving max_iter
             # cached edge sets to ContextCleaner pressured the heap in
@@ -244,11 +196,8 @@ def connected_components_star(
             cur.unpersist()
         e.unpersist()
         all_nodes.unpersist()
-        labels = connected_components(
-            inp, src="u", dst="v", max_iter=max(max_iter * 3, 60),
-            materialize=materialize)
-        inp.unpersist()
-        return labels
+        return connected_components(
+            inp, src="u", dst="v", max_iter=max(max_iter * 3, 60))
     # stars: (child, root); roots and isolated-in-star nodes map to themselves
     labels = cur.select(F.col("u").alias("node"), F.col("v").alias("component"))
     out = (
@@ -259,7 +208,6 @@ def connected_components_star(
     # the caller's action does not re-derive e from the input
     all_nodes.count()
     e.unpersist()
-    inp.unpersist()
     return out
 
 
@@ -269,7 +217,6 @@ def incremental_connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 20,
-    materialize: str = "localCheckpoint",
 ) -> DataFrame:
     """Fold a batch of NEW edges into an existing (node, component)
     labeling without recomputing the whole graph — the continuous-crawl
@@ -313,13 +260,9 @@ def incremental_connected_components(
     # deliberately NOT cached: the output is returned unevaluated, so a
     # cache could only be released before the caller's action (forcing
     # recompute anyway) or leaked.  Its 2 remaining uses are plain
-    # scans of the (parquet/bucketed) labels table.  materialize="none"
-    # is honored (no cut, no eager job) — the caller opted out of
-    # barrier side effects and pays the re-derivation instead.
+    # scans of the (parquet/bucketed) labels table.
     touched = prev_labels.join(ends, "node").select("component").distinct()
-    if materialize != "none":
-        touched = _lineage_cut(touched, materialize)
-    touched = touched.persist()
+    touched = touched.localCheckpoint(eager=True).persist()
     affected = prev_labels.join(touched, "component")
     # (node → component) star edges carry all old connectivity of the
     # affected components; roots (node == component) would be self-loops
@@ -329,8 +272,7 @@ def incremental_connected_components(
     )
     sub = star_edges.union(
         new_edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
-    relabeled = connected_components_star(
-        sub, src="u", dst="v", max_iter=max_iter, materialize=materialize)
+    relabeled = connected_components_star(sub, src="u", dst="v", max_iter=max_iter)
     # string-`on` joins put the join key first, so re-fix column order
     # explicitly and union by name, not position
     untouched = (
@@ -364,10 +306,7 @@ def eigenvector_centrality(
     dst: str = "dst",
     max_iter: int = 30,
     tol: float | None = 1e-6,
-    checkpoint_every: int = 5,
     raise_on_no_convergence: bool = False,
-    materialize: str = "localCheckpoint",
-    tol_check_every: int = 2,
 ) -> DataFrame:
     """Eigenvector centrality by power iteration over the undirected
     simple graph — iterative join-agg (the PageRank skeleton), reference
@@ -377,9 +316,9 @@ def eigenvector_centrality(
     Convergence is the networkx rule — L1 delta of the iterate,
     ``sum(|x_new - x_old|) < n * tol`` — not a norm-estimate comparison,
     which oscillating bipartite/periodic iterates can fool (two distinct
-    vectors with equal norms).  The delta test runs every
-    ``tol_check_every`` iterations (batched like connected_components'
-    convergence checks): each skipped check saves one driver-synchronous
+    vectors with equal norms).  The delta test runs every 2 iterations
+    (batched like connected_components' convergence checks), and lineage
+    is cut every 5: each skipped check saves one driver-synchronous
     job per iteration — on a real cluster a full scheduling round-trip —
     and batching can only ever run EXTRA iterations past convergence,
     never stop short, so the returned iterate is at least as converged.
@@ -389,7 +328,7 @@ def eigenvector_centrality(
     converging, like networkx's PowerIterationFailedConvergence.
 
     Returns (node, centrality) with the L2-normalized dominant
-    eigenvector, like networkx."""
+    eigenvector, like networkx; no rows for an empty edge set."""
     und = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -398,6 +337,10 @@ def eigenvector_centrality(
     )
     nodes = und.select(F.col("a").alias("node")).distinct()
     n = nodes.count()
+    if n == 0:
+        und.unpersist()
+        return edges.sparkSession.createDataFrame(
+            [], "node string, centrality double")
     x = nodes.withColumn("score", F.lit(1.0 / (n ** 0.5))).persist()
 
     converged = False
@@ -412,14 +355,13 @@ def eigenvector_centrality(
         if not norm:
             break
         new_x = y.select("node", (F.col("raw") / F.lit(norm)).alias("score"))
-        if (it + 1) % checkpoint_every == 0:
-            new_x = _lineage_cut(new_x, materialize)
+        if (it + 1) % 5 == 0:
+            new_x = new_x.localCheckpoint(eager=True)
         new_x = new_x.persist()
         # the final iteration always checks (like connected_components):
-        # convergence reached on a non-multiple-of-tol_check_every last
-        # round must not raise a spurious no-convergence error
-        if tol is not None and (
-                (it + 1) % tol_check_every == 0 or it == max_iter - 1):
+        # convergence reached on an odd last round must not raise a
+        # spurious no-convergence error
+        if tol is not None and ((it + 1) % 2 == 0 or it == max_iter - 1):
             delta = (
                 new_x.withColumnRenamed("score", "s_new")
                 .join(x, "node")
@@ -505,8 +447,6 @@ def louvain(
     dst: str = "dst",
     max_levels: int = 4,
     max_rounds: int = 12,
-    checkpoint_every: int = 3,
-    materialize: str = "localCheckpoint",
 ) -> DataFrame:
     """Deterministic distributed Louvain community detection — the
     modularity-optimizing counterpart of the reference's
@@ -537,7 +477,8 @@ def louvain(
     Scale shape per move round: one hash join (neighbor communities) +
     two aggregations on (node, community) + one on community — all
     key-partitioned shuffles, AQE/skew safe; per level one contraction
-    join.  Total jobs O(levels · rounds), each O(|E|) shuffle.
+    join.  Total jobs O(levels · rounds), each O(|E|) shuffle.  Lineage
+    is cut every 3 move rounds and at every contraction.
 
     Returns (node, community) for every endpoint of ``edges``."""
     DEC = "decimal(38,0)"
@@ -656,8 +597,8 @@ def louvain(
                 .alias("community"),
                 (gate & (F.col("best_score") > F.col("own_score"))).alias("_moved"),
             )
-            if (it + 1) % checkpoint_every == 0:
-                new_comm = _lineage_cut(new_comm, materialize)
+            if (it + 1) % 3 == 0:
+                new_comm = new_comm.localCheckpoint(eager=True)
             new_comm = new_comm.persist()
             n_moved = new_comm.filter("_moved").count()
             new_comm = new_comm.drop("_moved")
@@ -691,7 +632,7 @@ def louvain(
                 )
                 .select("orig", F.col("_nc").alias("community"))
             )
-        assign = _lineage_cut(assign, materialize).persist()
+        assign = assign.localCheckpoint(eager=True).persist()
         assign.count()
         if prev_assign is not None:
             prev_assign.unpersist()
@@ -725,8 +666,8 @@ def louvain(
             .groupBy("node")
             .agg(F.sum("w").alias("w"))
         )
-        new_und = _lineage_cut(new_und, materialize).persist()
-        new_loops = _lineage_cut(new_loops, materialize).persist()
+        new_und = new_und.localCheckpoint(eager=True).persist()
+        new_loops = new_loops.localCheckpoint(eager=True).persist()
         new_und.count()
         und.unpersist()
         und = new_und
@@ -746,8 +687,6 @@ def betweenness_centrality_sampled(
     k_sources: int | None = 64,
     normalized: bool = True,
     max_depth: int = 60,
-    checkpoint_every: int = 4,
-    materialize: str = "localCheckpoint",
     group_col: str | None = None,
     require_converged: bool = False,
 ) -> DataFrame:
@@ -781,7 +720,7 @@ def betweenness_centrality_sampled(
     uniform sampling, a deterministic pivot approximation here.
 
     ``k_sources=None`` makes EVERY node a source (exact Brandes without
-    materializing a count first).  ``group_col`` names a grouping column
+    counting the nodes first).  ``group_col`` names a grouping column
     on ``edges``: each group is an independent graph and every
     join/groupBy key carries the group, so N per-period graphs advance
     in ONE BFS wave per depth instead of N sequential jobs (reference
@@ -820,8 +759,9 @@ def betweenness_centrality_sampled(
     # und, so the per-level logical plan would otherwise embed the input's
     # full subtree O(depth) times — with a complex upstream (e.g. the
     # per-period triples join) Catalyst re-analysis dominates wall time
-    # long before any executor works (same hazard the CC loops fixed)
-    und = _lineage_cut(und, materialize).persist()
+    # long before any executor works (same hazard the CC loops fixed);
+    # the BFS frames are then cut every 4 levels
+    und = und.localCheckpoint(eager=True).persist()
     all_nodes = und.select(F.col("ug").alias("g"),
                            F.col("a").alias("node")).distinct().persist()
     n = all_nodes.count()
@@ -869,16 +809,16 @@ def betweenness_centrality_sampled(
             .withColumn("dist", F.lit(d + 1))
             .select("g", "source", "node", "dist", "sigma")
         )
-        if (d + 1) % checkpoint_every == 0:
-            nxt = _lineage_cut(nxt, materialize)
+        if (d + 1) % 4 == 0:
+            nxt = nxt.localCheckpoint(eager=True)
         nxt = nxt.persist()
         if nxt.isEmpty():
             nxt.unpersist()
             converged = True
             break
         new_visited = visited.union(nxt)
-        if (d + 1) % checkpoint_every == 0:
-            new_visited = _lineage_cut(new_visited, materialize)
+        if (d + 1) % 4 == 0:
+            new_visited = new_visited.localCheckpoint(eager=True)
         new_visited = new_visited.persist()
         if visited is not frontier:
             visited.unpersist()
@@ -938,10 +878,10 @@ def betweenness_centrality_sampled(
             .groupBy("g", "source", F.col("vnode").alias("node"))
             .agg(F.sum(F.col("sigma_v") * F.col("wt")).alias("delta"))
         )
-        if (d - dd + 1) % checkpoint_every == 0:
-            new_delta = _lineage_cut(new_delta, materialize)
+        if (d - dd + 1) % 4 == 0:
+            new_delta = new_delta.localCheckpoint(eager=True)
         new_delta = new_delta.persist()
-        new_delta.count()  # materialize before unpersisting inputs
+        new_delta.count()  # fill the cache before unpersisting inputs
         if delta is not None:
             delta.unpersist()
         w_frontier.unpersist()
@@ -965,13 +905,11 @@ def betweenness_centrality_sampled(
         )
     else:
         bc = spark.createDataFrame([], "g string, node string, btw double")
-    # cut lineage from the soon-unpersisted BFS frames (strategy-pluggable;
-    # "persist"/"none" keep recomputable lineage, so the unpersists below
-    # only cost recompute time, never correctness)
+    # cut lineage from the soon-unpersisted BFS frames
     out = all_nodes.join(bc, ["g", "node"], "left").na.fill({"btw": 0.0})
     out = out.select(F.col("g").alias(group_col), "node", "btw") if group_col \
         else out.select("node", "btw")
-    out = _lineage_cut(out, materialize)
+    out = out.localCheckpoint(eager=True)
     if delta is not None:
         delta.unpersist()
     for lvl in per_level:

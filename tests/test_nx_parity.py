@@ -118,9 +118,7 @@ def test_eigenvector_matches_nx(spark, web_df, web_g):
     want = nx.eigenvector_centrality(web_g, max_iter=5000, tol=1e-12)
     got = {
         r.node: r.centrality
-        for r in eigenvector_centrality(
-            web_df, max_iter=120, tol=1e-9, checkpoint_every=10
-        ).collect()
+        for r in eigenvector_centrality(web_df, max_iter=120, tol=1e-9).collect()
     }
     assert set(got) == set(want)
     for v in want:

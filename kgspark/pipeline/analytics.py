@@ -132,10 +132,10 @@ def graph_metrics(triples: DataFrame) -> DataFrame:
 
 def degree_centrality(triples: DataFrame, k: int = 10) -> DataFrame:
     """A-8/A-15 degree top-k; normalized like networkx (deg / (N-1))."""
-    und = triples.select(F.col("subject").alias("a"), F.col("object").alias("b")).union(
-        triples.select(F.col("object").alias("a"), F.col("subject").alias("b"))
-    ).distinct()
-    deg = und.groupBy(F.col("a").alias("entity")).agg(F.count("*").alias("degree"))
+    from kgspark.pipeline.graph import degrees
+
+    deg = degrees(triples, src="subject", dst="object").withColumnRenamed(
+        "node", "entity")
     # node count as a broadcast scalar, not a driver-side deg.count()
     # action mid-plan-construction (one job instead of two)
     n = F.broadcast(deg.agg(F.greatest(F.count("*") - 1, F.lit(1)).alias("_nm1")))

@@ -16,6 +16,8 @@ are computed per group in one job.
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 
@@ -25,10 +27,9 @@ def _cut_input(edges: DataFrame) -> DataFrame:
     Both CC variants read their input twice (the two edge directions),
     and every round embeds the edge set's logical plan, so an uncut
     input re-runs the caller's whole lineage (e.g. the LSH self-join
-    and its verifier) per read, and a complex caller plan (the
-    incremental-CC subgraph) pays Catalyst re-analysis per round —
-    measured 28 s of driver time on a 3k-edge subgraph whose plan
-    multiplied ~64x into the first round."""
+    and its verifier) per read, and a complex caller plan pays Catalyst
+    re-analysis per round — measured 28 s of driver time on a 3k-edge
+    join-tree input whose plan multiplied ~64x into the first round."""
     return edges.localCheckpoint(eager=True)
 
 
@@ -37,17 +38,17 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     key: str | None = None,
-    max_iter: int = 30,
 ) -> DataFrame:
     """Return (key?, node, component); component = min label in the
     (undirected) component — the reference DFS also follows both edge
     directions (entity_standardization.py:303-310).
 
-    Lineage is cut every 3 rounds.  Convergence is tested only every 2
-    rounds: the change-detection join is a full extra job per round, and
-    labels converge in O(diameter) rounds anyway — batching the check
-    halves the job count at the cost of at most one no-op propagation
-    round."""
+    Runs until no label changes: labels only decrease, over a finite
+    set, so the loop always ends, after O(diameter) rounds.  Lineage is
+    cut every 3 rounds.  Convergence is tested only every 2 rounds: the
+    change-detection join is a full extra job per round — batching the
+    check halves the job count at the cost of at most one no-op
+    propagation round."""
     kcols = [key] if key else []
     inp = _cut_input(
         edges.select(*kcols, F.col(src).alias("a"), F.col(dst).alias("b")))
@@ -67,7 +68,7 @@ def connected_components(
         .persist()
     )
 
-    for it in range(max_iter):
+    for it in itertools.count(1):
         cond = [und["b"] == labels["node"]]
         if key:
             cond.append(und[key] == labels["_lk"])
@@ -82,11 +83,11 @@ def connected_components(
             .groupBy(*lkcols, "node")
             .agg(F.min("component").alias("component"))
         )
-        if (it + 1) % 3 == 0:
+        if it % 3 == 0:
             new_labels = new_labels.localCheckpoint(eager=True)
         new_labels = new_labels.persist()
         changed = 1
-        if (it + 1) % 2 == 0 or it == max_iter - 1:
+        if it % 2 == 0:
             changed = (
                 new_labels.withColumnRenamed("component", "c_new")
                 .join(labels, [*lkcols, "node"])
@@ -196,8 +197,7 @@ def connected_components_star(
             cur.unpersist()
         e.unpersist()
         all_nodes.unpersist()
-        return connected_components(
-            inp, src="u", dst="v", max_iter=max(max_iter * 3, 60))
+        return connected_components(inp, src="u", dst="v")
     # stars: (child, root); roots and isolated-in-star nodes map to themselves
     labels = cur.select(F.col("u").alias("node"), F.col("v").alias("component"))
     out = (
@@ -216,73 +216,29 @@ def incremental_connected_components(
     new_edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 20,
 ) -> DataFrame:
     """Fold a batch of NEW edges into an existing (node, component)
-    labeling without recomputing the whole graph — the continuous-crawl
-    path: at 10^12 documents a nightly batch touches a sliver of the
-    entity graph, and a full global CC per batch is almost entirely
-    redundant work.
+    labeling — the streaming path's per-batch step.
 
-    Exactness: a CC labeling is a connectivity-preserving contraction —
-    the star edges (node → component) have the same components as the
-    original edge set, and component ids are member-node minima, so
+    A CC labeling is a connectivity-preserving contraction: the star
+    edges (node → component) have the same components as the edge set
+    they label, and component ids are member-node minima, so
 
         CC(E_old ∪ E_new) == CC(star(prev_labels) ∪ E_new)
 
-    and components untouched by ``new_edges`` cannot change at all.
-    Work is therefore restricted to the touched frontier:
-
-      1. components containing a new-edge endpoint (one equi-join);
-      2. star edges of those components ∪ ``new_edges`` → CC (the
-         subgraph is a union of stars plus the batch, so large/small-star
-         converges in ~2 rounds regardless of old-component diameter);
-      3. everything else passes through untouched (left_anti).
-
-    The two big-side joins (touched-filter and left_anti pass-through)
-    share the same component key: with the labels table stored bucketed
-    by component (the natural layout for a table this function itself
-    produces), both run shuffle-free on the 10^12-row side, leaving the
-    batch-proportional subgraph as the only shuffled data.
+    The fold is one ``connected_components`` call over the star edges
+    and the batch.  Roots stay in as (root, root) self-loops, so a
+    singleton component keeps its row.  Every old component enters with
+    radius 1, so the rounds are bounded by the chain of components the
+    batch merges, not by the old components' diameters.
 
     Returns (node, component) identical to a full recompute over the
     union edge set (asserted in tests), including brand-new nodes and
     batches that merge previously separate components."""
-    ends = (
-        new_edges.select(F.col(src).alias("node"))
-        .union(new_edges.select(F.col(dst).alias("node")))
-        .distinct()
-    )
-    prev_labels = prev_labels.select("node", "component")
-    # touched is tiny (one row per batch-adjacent component): cut it
-    # eagerly so neither the subgraph nor the pass-through branch of
-    # the LAZY returned frame re-derives it — prev_labels itself is
-    # deliberately NOT cached: the output is returned unevaluated, so a
-    # cache could only be released before the caller's action (forcing
-    # recompute anyway) or leaked.  Its 2 remaining uses are plain
-    # scans of the (parquet/bucketed) labels table.
-    touched = prev_labels.join(ends, "node").select("component").distinct()
-    touched = touched.localCheckpoint(eager=True).persist()
-    affected = prev_labels.join(touched, "component")
-    # (node → component) star edges carry all old connectivity of the
-    # affected components; roots (node == component) would be self-loops
-    star_edges = (
-        affected.filter(F.col("node") != F.col("component"))
-        .select(F.col("node").alias("u"), F.col("component").alias("v"))
-    )
-    sub = star_edges.union(
-        new_edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
-    relabeled = connected_components_star(sub, src="u", dst="v", max_iter=max_iter)
-    # string-`on` joins put the join key first, so re-fix column order
-    # explicitly and union by name, not position
-    untouched = (
-        prev_labels.join(touched, "component", "left_anti")
-        .select("node", "component")
-    )
-    # touched stays persisted: it feeds BOTH branches of the returned
-    # lazy frame; it is one small row per touched component and the
-    # periodic ContextCleaner GC reclaims it after the caller's action
-    return untouched.unionByName(relabeled.select("node", "component"))
+    stars = prev_labels.select(
+        F.col("node").alias("src"), F.col("component").alias("dst"))
+    batch = new_edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    return connected_components(stars.union(batch))
 
 
 def degrees(edges: DataFrame, src: str = "src", dst: str = "dst",
@@ -358,9 +314,8 @@ def eigenvector_centrality(
         if (it + 1) % 5 == 0:
             new_x = new_x.localCheckpoint(eager=True)
         new_x = new_x.persist()
-        # the final iteration always checks (like connected_components):
-        # convergence reached on an odd last round must not raise a
-        # spurious no-convergence error
+        # the final iteration always checks: convergence reached on an
+        # odd last round must not raise a spurious no-convergence error
         if tol is not None and ((it + 1) % 2 == 0 or it == max_iter - 1):
             delta = (
                 new_x.withColumnRenamed("score", "s_new")

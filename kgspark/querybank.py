@@ -940,10 +940,11 @@ SQL_KG_DEDUP = """
 def q_kg_connected_components(spark, sf):
     """O-20: ALL THREE CC paths in one driver query — min-label
     propagation, large-star/small-star contraction, and the
-    incremental fold (labels from ~80% of the edges + the remaining
-    ~20% folded in as a "new batch" via
-    ``incremental_connected_components``) — each tagged by ``algo``
-    and checked against the same recursive-CTE reachability oracle,
+    incremental fold (labels from ~80% of the edges; the remaining
+    ~20% folded in as a "new batch" by
+    ``incremental_connected_components``, which reruns min-label CC
+    over the prior labels' star edges plus the batch) — each tagged by
+    ``algo`` and checked against the same recursive-CTE reachability oracle,
     so the driver verifies that every implementation agrees exactly.
     The incremental branch's oracle needs no split replay: its
     contract is labels identical to the full recompute regardless of

@@ -10,6 +10,11 @@ streaming path is `readStream` + `foreachBatch(build_triples)` — one code
 path for batch and streaming (the Spark-idiomatic way to reuse a complex
 batch pipeline with joins/windows that aren't stream-supported), with
 exactly-once sink semantics from the checkpointed batch id.
+
+``start_kg_labels_stream`` also keeps connected-component labels current:
+each batch folds its edges into the previous labels snapshot (prior
+components enter as stars, so the fold is one production CC call) and
+writes a new versioned snapshot.
 """
 
 from __future__ import annotations
@@ -169,14 +174,15 @@ def start_kg_labels_stream(
     connected-component labels: each micro-batch runs the deterministic
     pipeline, appends its triples, and folds its new edges into the
     previous batch's (node, component) labeling via
-    ``graph.incremental_connected_components`` — work proportional to
-    the touched components, not the accumulated graph (the point at
-    crawl scale, where a micro-batch touches a sliver of the entity
-    graph).  Labels land under ``out_dir/cc_labels/v=<batch_id>``:
-    version dirs are immutable once written and a retried batch
-    overwrites only its own version, so the read-latest/write-next
-    cycle is crash-idempotent; old versions are the retention knob
-    (compact/expire out-of-band).  ``read_latest_labels`` returns the
+    ``graph.incremental_connected_components`` — one min-label CC over
+    the previous labeling's (node → component) star edges and the
+    batch's edges, never a re-read of the accumulated triples.  The
+    first batch has no previous labeling and runs a plain
+    ``connected_components`` over its own edges.  Labels land under
+    ``out_dir/cc_labels/v=<batch_id>``: version dirs are immutable
+    once written and a retried batch overwrites only its own version,
+    so the read-latest/write-next cycle is crash-idempotent; old
+    versions are the retention knob (compact/expire out-of-band).  ``read_latest_labels`` returns the
     current labeling, asserted in tests to equal a full CC over all
     edges streamed so far."""
     from kgspark.pipeline.graph import (

@@ -193,6 +193,16 @@ def test_node_importance_large_graph_uses_sampled_path(spark):
     assert all(10.0 <= s <= 30.0 + 1e-9 for s in sizes.values())
 
 
+def test_cc_converges_on_long_path(spark):
+    """Min-label CC runs until no label changes: a 64-node path needs
+    63 propagation rounds, and every node must end in one component."""
+    edges = [(f"p{i:02d}", f"p{i + 1:02d}") for i in range(63)]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    got = {(r.node, r.component)
+           for r in connected_components(df).collect()}
+    assert got == {(f"p{i:02d}", "p00") for i in range(64)}
+
+
 def test_star_cc_equals_minlabel_cc(spark):
     """Large-star/small-star CC must produce exactly the min-label
     component assignment on chains (worst case for label propagation),
@@ -216,7 +226,7 @@ def test_star_cc_equals_minlabel_cc(spark):
         [e for e in edges if e[0] != e[1]], "src string, dst string")
 
     want = {(r.node, r.component)
-            for r in connected_components(df, max_iter=60).collect()}
+            for r in connected_components(df).collect()}
     got = {(r.node, r.component)
            for r in connected_components_star(df).collect()}
     assert got == want
@@ -413,7 +423,7 @@ def test_incremental_cc_equals_full_recompute(spark):
     # old labels include a singleton only reachable via the new batch
     old_df = spark.createDataFrame(
         old_edges + [("lone", "lone2")], "src string, dst string")
-    prev = connected_components(old_df, max_iter=60)
+    prev = connected_components(old_df)
 
     new_edges = [
         ("c05", "k2"),          # merge chain + clique
@@ -429,13 +439,13 @@ def test_incremental_cc_equals_full_recompute(spark):
     full = spark.createDataFrame(
         old_edges + [("lone", "lone2")] + new_edges, "src string, dst string")
     want = {(r.node, r.component)
-            for r in connected_components(full, max_iter=60).collect()}
+            for r in connected_components(full).collect()}
     assert got == want
 
 
 def test_incremental_cc_untouched_pass_through(spark):
-    """Components with no new-edge endpoint keep their exact labels (no
-    relabeling work is even eligible for them)."""
+    """Components with no new-edge endpoint keep their exact labels:
+    their star edges re-enter CC unchanged, so their minima stay."""
     from kgspark.pipeline.graph import (
         connected_components,
         incremental_connected_components,
@@ -450,6 +460,29 @@ def test_incremental_cc_untouched_pass_through(spark):
     assert {("a", "a"), ("b", "a"), ("c", "a")} <= got
     assert {("x", "x"), ("y", "x"), ("z", "x")} <= got
     assert len(got) == 6
+
+
+def test_incremental_cc_chains_many_components(spark):
+    """A batch that chains 40 prior two-node components into one
+    80-node path whose minimum sits mid-path: the fold's CC needs ~40
+    rounds, so the labels are right only if the loop runs to
+    convergence."""
+    from kgspark.pipeline.graph import incremental_connected_components
+
+    # path position i holds component q{(i + 20) % 40}: q00 is in the middle
+    comp = [f"q{(i + 20) % 40:02d}" for i in range(40)]
+    old_edges = [(f"{c}a", f"{c}b") for c in comp]
+    new_edges = [(f"{comp[i]}b", f"{comp[i + 1]}a") for i in range(39)]
+    old_df = spark.createDataFrame(old_edges, "src string, dst string")
+    new_df = spark.createDataFrame(new_edges, "src string, dst string")
+    prev = connected_components(old_df)
+    got = {(r.node, r.component)
+           for r in incremental_connected_components(prev, new_df).collect()}
+    full = spark.createDataFrame(old_edges + new_edges, "src string, dst string")
+    want = {(r.node, r.component)
+            for r in connected_components(full).collect()}
+    assert want == {(n, "q00a") for e in old_edges for n in e}
+    assert got == want
 
 
 def test_grouped_betweenness_equals_per_group_runs(spark):

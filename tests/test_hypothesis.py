@@ -195,12 +195,12 @@ def test_incremental_cc_parity_on_generated_graphs(spark):
         base, batch = split
         base_df = spark.createDataFrame(base, "src string, dst string")
         batch_df = spark.createDataFrame(batch, "src string, dst string")
-        prev = connected_components(base_df, max_iter=60)
+        prev = connected_components(base_df)
         got = {(r.node, r.component) for r in
                incremental_connected_components(prev, batch_df).collect()}
-        want = {(r.node, r.component) for r in connected_components(
-            spark.createDataFrame(base + batch, "src string, dst string"),
-            max_iter=60).collect()}
+        full = spark.createDataFrame(base + batch, "src string, dst string")
+        want = {(r.node, r.component)
+                for r in connected_components(full).collect()}
         assert got == want
 
     run()

@@ -176,7 +176,7 @@ def test_stream_incremental_cc_labels_match_full_cc(spark, tmp_path):
         .filter(F.col("src") != F.col("dst")).distinct()
     )
     want = {(r.node, r.component)
-            for r in connected_components(edges, max_iter=60).collect()}
+            for r in connected_components(edges).collect()}
     got = {(r.node, r.component)
            for r in read_latest_labels(spark, out).collect()}
     assert got == want

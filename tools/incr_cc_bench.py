@@ -1,16 +1,15 @@
-"""Incremental-CC microbench: quantify the point of
-``graph.incremental_connected_components`` — folding a small new-edge
-batch into an existing labeling must beat recomputing CC over the whole
-accumulated graph, and the gap must widen as the accumulated graph
-grows (at crawl scale the batch is a sliver, so full recompute is
-almost entirely redundant work).
+"""Incremental-CC microbench: time ``graph.incremental_connected_components``
+(fold a new-edge batch into stored labels) against a full
+``connected_components`` recompute over the accumulated edges.
 
 Protocol: deterministic synthetic edge set (seeded; chains + random
 attachments so components have real diameter), labels precomputed and
 written to parquet (as the streaming path does), batch = ``batch_frac``
 of the edges held out.  Timed: (a) full CC over base+batch edges,
 (b) incremental fold of the batch into the stored labels.  Both outputs
-asserted identical before timing is reported.
+are asserted identical before any time is reported.  The session takes
+the default master and shuffle partitions (``SPARK_GRAFT_CPUS`` or the
+CPU count).
 
 Usage: python tools/incr_cc_bench.py [n_edges] [batch_frac] → one JSON line
 """
@@ -61,9 +60,9 @@ def gen_batch(n_nodes: int, n_batch: int, localized: bool,
               seed: int = 23) -> list[tuple[str, str]]:
     """localized=True — the crawl case: the batch attaches new nodes to
     (and adds edges within) the last ~1% of the node id space, so it
-    touches a sliver of the components.  localized=False — adversarial:
-    uniform random endpoints touch nearly every component, the regime
-    where incremental degenerates to ~full work by design."""
+    touches a sliver of the components.  localized=False — uniform
+    random endpoints touch nearly every component and merge many of
+    them."""
     rng = random.Random(seed)
     batch = []
     lo = int(n_nodes * 0.99) if localized else 0
@@ -81,13 +80,11 @@ def gen_batch(n_nodes: int, n_batch: int, localized: bool,
 def time_pair(spark, base_edges, batch, labels_path):
     base_df = spark.createDataFrame(base_edges, "src string, dst string")
     batch_df = spark.createDataFrame(batch, "src string, dst string")
-    connected_components(base_df, max_iter=200).write.mode(
-        "overwrite").parquet(labels_path)
+    connected_components(base_df).write.mode("overwrite").parquet(labels_path)
     prev = spark.read.parquet(labels_path)
 
     t0 = time.time()
-    full_df = connected_components(
-        base_df.unionByName(batch_df), max_iter=200)
+    full_df = connected_components(base_df.unionByName(batch_df))
     n_full = full_df.count()
     t_full = time.time() - t0
 
@@ -105,18 +102,17 @@ def time_pair(spark, base_edges, batch, labels_path):
 def main() -> None:
     n_edges = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
     batch_frac = float(sys.argv[2]) if len(sys.argv) > 2 else 0.01
-    spark = get_session(master="local[8]", shuffle_partitions=16,
-                        app_name="incr-cc-bench")
+    spark = get_session(app_name="incr-cc-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     edges = gen_edges(n_edges)
     n_nodes = max(4, n_edges // 2)
     n_batch = max(1, int(n_edges * batch_frac))
 
-    # warm-up: JVM/codegen on the iterative shape (untimed)
+    # warm-up: JVM/codegen on the iterative shape (untimed); the tail of
+    # the edge list is random intra-block edges, so few rounds
     connected_components(
-        spark.createDataFrame(edges[:2000], "src string, dst string"),
-        max_iter=10).count()
+        spark.createDataFrame(edges[-2000:], "src string, dst string")).count()
 
     out = {"metric": "incremental_cc_speedup", "n_edges": n_edges,
            "batch_edges": n_batch}

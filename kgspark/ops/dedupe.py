@@ -9,7 +9,9 @@ Five tiers, all shuffle-conscious:
                  caps hot shingles)
   minhash-LSH  — shingle → k min-hashes → band buckets → equi-join →
                  exact verify; the 100 TB path (candidate count is bounded
-                 by band collisions, AQE skew-join mops up hot buckets)
+                 by band collisions, AQE skew-join mops up hot buckets).
+                 ``lsh_candidates`` is the repo's one MinHash-LSH banding;
+                 entity linking calls it with name-token shingles
   simhash      — 64-bit weighted-bit fingerprint, near-dup = small hamming
                  distance within 16-bit band blocks
   embedding    — cosine over an embedding column (see ops.similarity)
@@ -109,30 +111,44 @@ def jaccard_pairs_exact(
     )
 
 
+def _shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(id, shingle) rows: one per distinct word n-gram of each doc."""
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.explode(word_ngrams(F.col(text_col), n)).alias("shingle"),
+    )
+
+
+def _signature(sh: DataFrame, k: int, hash_fn: str) -> DataFrame:
+    """(id, h0..h{k-1}): per-seed minimum hash over each id's shingles."""
+    aggs = [F.min(_hash32(F.col("shingle"), i, hash_fn)).alias(f"h{i}") for i in range(k)]
+    return sh.groupBy("id").agg(*aggs)
+
+
 def minhash_signature(
     df: DataFrame, id_col: str, text_col: str, n: int = 3, k: int = 16,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """(id, h0..h{k-1}): per-doc MinHash signature over word n-grams."""
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(word_ngrams(F.col(text_col), n)).alias("shingle"),
-    )
-    aggs = [F.min(_hash32(F.col("shingle"), i, hash_fn)).alias(f"h{i}") for i in range(k)]
-    return sh.groupBy("id").agg(*aggs)
+    return _signature(_shingles(df, id_col, text_col, n), k, hash_fn)
 
 
-def lsh_dup_pairs(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, k: int = 16,
-    bands: int = 8, threshold: float = 0.7, hash_fn: str = "xxhash64",
+def lsh_candidates(
+    sh: DataFrame, k: int, bands: int, hash_fn: str = "xxhash64",
 ) -> DataFrame:
-    """MinHash-LSH candidate pairs + exact-Jaccard verification.
+    """MinHash-LSH core: distinct (id1, id2) pairs, id1 < id2, whose
+    k-hash signatures over (id, shingle) rows agree on at least one band.
 
-    Output (id1, id2, jaccard) — subset of jaccard_pairs_exact limited to
-    LSH-collision candidates; recall governed by (k, bands, threshold).
-    """
-    rows = max(1, k // bands)
-    sig = minhash_signature(df, id_col, text_col, n, k, hash_fn)
+    Band b hashes the ``k // bands`` signature values it covers, joined
+    with "_", into a bucket key; candidates are the (band, bucket)
+    equi-join.  ``bands > k`` would leave bands with no hash in them,
+    and every id would share their one bucket, so it is refused.
+    Document dedup (``lsh_dup_pairs``) and entity linking
+    (``linking.lsh_candidate_pairs``) both band through here."""
+    if not 0 < bands <= k:
+        raise ValueError(f"LSH needs 1 <= bands <= k hashes, got bands={bands}, k={k}")
+    rows = k // bands
+    sig = _signature(sh, k, hash_fn)
     band_cols = F.array(
         *[
             F.xxhash64(
@@ -145,12 +161,24 @@ def lsh_dup_pairs(
     banded = sig.select("id", F.posexplode(band_cols).alias("band", "bucket"))
     a = banded.select(F.col("id").alias("id1"), "band", "bucket")
     b = banded.select(F.col("id").alias("id2"), "band", "bucket")
-    cand = (
+    return (
         a.join(b, ["band", "bucket"])
         .filter(F.col("id1") < F.col("id2"))
         .select("id1", "id2")
         .distinct()
     )
+
+
+def lsh_dup_pairs(
+    df: DataFrame, id_col: str, text_col: str, n: int = 3, k: int = 16,
+    bands: int = 8, threshold: float = 0.7, hash_fn: str = "xxhash64",
+) -> DataFrame:
+    """MinHash-LSH candidate pairs + exact-Jaccard verification.
+
+    Output (id1, id2, jaccard) — subset of jaccard_pairs_exact limited to
+    LSH-collision candidates; recall governed by (k, bands, threshold).
+    """
+    cand = lsh_candidates(_shingles(df, id_col, text_col, n), k, bands, hash_fn)
     t = df.select(F.col(id_col).alias("id"), word_ngrams(F.col(text_col), n).alias("sh"))
     t1 = t.select(F.col("id").alias("id1"), F.col("sh").alias("sh1"))
     t2 = t.select(F.col("id").alias("id2"), F.col("sh").alias("sh2"))

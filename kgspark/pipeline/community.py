@@ -156,10 +156,12 @@ def community_inference(triples: DataFrame, url: str = "kg://community") -> Data
     both = between_community_triples(triples, members=members).unionByName(
         within_community_triples(triples, members=members)
     )
-    w = Window.orderBy("predicate", "subject", "object")
-    return both.select(
-        F.lit(url).alias("url"),
-        "subject", "predicate", "object",
+    # seq orders rows per document (url), as pipeline seq does; url is one
+    # constant here, so the order equals a global window's, minus Spark's
+    # "No Partition Defined" single-partition warning
+    w = Window.partitionBy("url").orderBy("predicate", "subject", "object")
+    return both.withColumn("url", F.lit(url)).select(
+        "url", "subject", "predicate", "object",
         F.lit(0).cast("int").alias("chunk"),
         F.row_number().over(w).cast("long").alias("seq"),
         "inferred",

@@ -4,7 +4,11 @@ Connected components via min-label propagation (GraphFrames-style) —
 reference analog: recursive DFS at entity_standardization.py:280-319
 (stack-bound, single-machine).  Ours is the standard large-graph
 formulation: labels converge to the component minimum in O(diameter)
-join+agg rounds (SURVEY §4 "iterative CC at scale").
+join+agg rounds (SURVEY §4 "iterative CC at scale").  It is the one CC
+algorithm: entity linking, the incremental streaming fold, community
+inference and the analytics all call ``connected_components``.  A
+large-star/small-star variant (O(log n) rounds) was timed against it on
+linking's pair graph and removed (BENCH.md §6a).
 
 Every iterative loop cuts lineage one way, an eager ``localCheckpoint``
 at a fixed per-algorithm cadence: uncut, each round's self-join multiplies
@@ -19,18 +23,6 @@ from __future__ import annotations
 import itertools
 
 from pyspark.sql import DataFrame, Window, functions as F
-
-
-def _cut_input(edges: DataFrame) -> DataFrame:
-    """Cut the projected input edges once, before the loops fan them out.
-
-    Both CC variants read their input twice (the two edge directions),
-    and every round embeds the edge set's logical plan, so an uncut
-    input re-runs the caller's whole lineage (e.g. the LSH self-join
-    and its verifier) per read, and a complex caller plan pays Catalyst
-    re-analysis per round — measured 28 s of driver time on a 3k-edge
-    join-tree input whose plan multiplied ~64x into the first round."""
-    return edges.localCheckpoint(eager=True)
 
 
 def connected_components(
@@ -50,8 +42,14 @@ def connected_components(
     check halves the job count at the cost of at most one no-op
     propagation round."""
     kcols = [key] if key else []
-    inp = _cut_input(
-        edges.select(*kcols, F.col(src).alias("a"), F.col(dst).alias("b")))
+    # cut the projected input once, before the two-direction union: every
+    # read and every round would otherwise re-run the caller's lineage
+    # (e.g. the LSH self-join and its verifier) and re-analyze its plan —
+    # measured 28 s of driver time on a 3k-edge join-tree input whose plan
+    # multiplied ~64x into the first round
+    inp = edges.select(
+        *kcols, F.col(src).alias("a"), F.col(dst).alias("b")
+    ).localCheckpoint(eager=True)
     und = (
         inp.union(inp.select(*kcols, F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
@@ -103,112 +101,6 @@ def connected_components(
     if key:
         labels = labels.withColumnRenamed("_lk", key)
     return labels
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    converges in O(log n) rounds instead of min-label propagation's
-    O(diameter), the right trade at 100× graph scale where long chains
-    make per-round label hops the bottleneck.
-
-    large-star: each node points its LARGER neighbors at the minimum of
-    its neighborhood; small-star: its smaller-or-equal neighbors.  At
-    convergence the edge set is a union of stars rooted at component
-    minima.  Returns (node, component) — identical output to
-    ``connected_components`` (asserted in tests).
-
-    Convergence detection: the (count, xxhash-sum) signature of the edge
-    set — one cheap single-row action per round instead of a set diff.
-    Lineage is cut every round: each double-star round multiplies the
-    plan several-fold (measured 4.5× wall-clock at a cut every 2 rounds).
-    """
-    inp = _cut_input(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
-    e = (
-        inp.filter(F.col("u") != F.col("v"))
-        .union(inp.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct()
-        .persist()
-    )
-    all_nodes = e.select(F.col("u").alias("node")).distinct().persist()
-
-    def star(cur: DataFrame, large: bool) -> DataFrame:
-        und = cur.union(cur.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
-        m = und.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m"))
-        joined = und.join(m, "u")
-        cond = F.col("v") > F.col("u") if large else F.col("v") <= F.col("u")
-        out = (
-            joined.filter(cond)
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(joined.select("u", F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        return out
-
-    def signature(cur: DataFrame):
-        row = cur.agg(
-            F.count("*").alias("n"),
-            # decimal sum: a long sum of 64-bit hashes overflows ANSI mode
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    cur = e
-    prev_sig = None
-    sig = None
-    converged = False
-    for _ in range(max_iter):
-        prev_cur = cur
-        cur = star(star(cur, large=True), large=False)
-        cur = cur.localCheckpoint(eager=True).persist()
-        sig = signature(cur)  # fills cur's cache (post-cut, independent)
-        if prev_cur is not e:
-            # release the superseded iterate NOW — leaving max_iter
-            # cached edge sets to ContextCleaner pressured the heap in
-            # long sessions (and the fallback path below would run its
-            # whole min-label loop under that dead weight)
-            prev_cur.unpersist()
-        if sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
-    # Convergence + well-formedness gate: exhausting max_iter leaves a
-    # partially-contracted forest (possibly even 1-out-per-node, so a
-    # shape check alone cannot catch it), and the signature equality can
-    # in principle be fooled by a hash collision — either way a wrong
-    # labeling would otherwise be returned SILENTLY.  A converged star
-    # edge set has exactly one outgoing edge per non-root node, so
-    # |edges| == |distinct u| certifies the shape with one extra cheap
-    # count (the edge count was already paid by the signature action).
-    # On any doubt, fall back to min-label CC (same output contract);
-    # only a collision that also yields a well-formed-but-stale forest
-    # would slip through — two simultaneous ~2^-64 events.
-    well_formed = (
-        converged and sig[0] == cur.select("u").distinct().count())
-    if not well_formed:
-        if cur is not e:
-            cur.unpersist()
-        e.unpersist()
-        all_nodes.unpersist()
-        return connected_components(inp, src="u", dst="v")
-    # stars: (child, root); roots and isolated-in-star nodes map to themselves
-    labels = cur.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    out = (
-        all_nodes.join(labels, "node", "left")
-        .select("node", F.coalesce("component", F.col("node")).alias("component"))
-    )
-    # the returned frame is lazy: fill all_nodes while e is cached, so
-    # the caller's action does not re-derive e from the input
-    all_nodes.count()
-    e.unpersist()
-    return out
 
 
 def incremental_connected_components(

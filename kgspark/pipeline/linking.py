@@ -9,10 +9,11 @@ config-gated OFF in the parity configuration and ON for corpus-scale runs.
 
 Design (all JVM-side, no Python):
   1. tokenize entity names (words + char-3-gram shingles)
-  2. k independent min-hashes via ``xxhash64(token, seed_i)``
-  3. band the signature; bucket id = hash of the band slice
-  4. equi-join on (band, bucket) → candidate pairs (skew-bounded: bucket
-     sizes are capped by banding; AQE skew-join handles residual hotspots)
+  2–4. MinHash-LSH over the tokens: ``ops.dedupe.lsh_candidates``, the
+     same core document dedup bands through (k ``xxhash64`` min-hashes,
+     bucket = hash of each band slice, equi-join on (band, bucket) →
+     candidate pairs; bucket sizes are capped by banding, AQE skew-join
+     handles residual hotspots)
   5. exact verify: token-set Jaccard ≥ threshold (default), or
      corpus-IDF-weighted cosine (``lsh_verify = "tfidf"``) — the north
      rule's "TF-IDF" variant; shared boilerplate tokens get low idf
@@ -27,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from kgspark.config import KgConfig
+from kgspark.ops.dedupe import lsh_candidates
 from kgspark.pipeline.graph import connected_components
 
 
@@ -40,57 +42,19 @@ def _tokens(col):
     return F.array_distinct(F.concat(words, grams))
 
 
-def minhash_signatures(ents: DataFrame, entity_col: str, num_hashes: int) -> DataFrame:
-    """(entity, sig array<long>) via per-seed min over token hashes."""
+def lsh_candidate_pairs(ents: DataFrame, entity_col: str, cfg: KgConfig) -> DataFrame:
+    """Candidate (e1, e2) pairs, e1 < e2, sharing at least one LSH band
+    bucket of their token MinHash signatures."""
     # two-step projection: computing the token array in its own Project
     # avoids Spark 4.1's LateralColumnAliasReference internal error when the
     # source column shares the output name
     toks = (
-        ents.select(F.col(entity_col).alias("entity"))
-        .withColumn("_toks", _tokens(F.col("entity")))
-        .select("entity", F.explode("_toks").alias("tok"))
+        ents.select(F.col(entity_col).alias("id"))
+        .withColumn("_toks", _tokens(F.col("id")))
+        .select("id", F.explode("_toks").alias("shingle"))
     )
-    aggs = [
-        F.min(F.xxhash64("tok", F.lit(i))).alias(f"h{i}") for i in range(num_hashes)
-    ]
-    sig = toks.groupBy("entity").agg(*aggs)
-    return sig.select(
-        "entity", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig")
-    )
-
-
-def lsh_candidate_pairs(ents: DataFrame, entity_col: str, cfg: KgConfig) -> DataFrame:
-    """Candidate (e1, e2) pairs sharing at least one LSH band bucket."""
-    rows_per_band = max(1, cfg.lsh_num_hashes // cfg.lsh_bands)
-    sig = minhash_signatures(ents, entity_col, cfg.lsh_num_hashes)
-    bands = sig.select(
-        "entity",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(cfg.lsh_bands - 1)),
-                lambda b: F.xxhash64(
-                    F.array_join(
-                        F.transform(
-                            F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band),
-                            lambda h: h.cast("string"),
-                        ),
-                        "_",
-                    ),
-                    b,
-                ),
-            )
-        ).alias("band", "bucket"),
-    )
-    left = bands.select(F.col("band").alias("b1"), F.col("bucket").alias("k1"),
-                        F.col("entity").alias("e1"))
-    right = bands.select(F.col("band").alias("b2"), F.col("bucket").alias("k2"),
-                         F.col("entity").alias("e2"))
-    return (
-        left.join(right, (left["b1"] == right["b2"]) & (left["k1"] == right["k2"])
-                  & (left["e1"] < right["e2"]))
-        .select("e1", "e2")
-        .distinct()
-    )
+    return lsh_candidates(toks, cfg.lsh_num_hashes, cfg.lsh_bands).select(
+        F.col("id1").alias("e1"), F.col("id2").alias("e2"))
 
 
 def verify_jaccard(pairs: DataFrame, threshold: float) -> DataFrame:
@@ -201,7 +165,6 @@ def link_entities(triples: DataFrame, cfg: KgConfig) -> DataFrame:
 
 
 def apply_linking(triples: DataFrame, link_map: DataFrame,
-                  broadcast_map: bool | None = None,
                   max_broadcast_rows: int = 5_000_000) -> DataFrame:
     """Rewrite subject/object through the (variant → canon) map.
 
@@ -214,9 +177,7 @@ def apply_linking(triples: DataFrame, link_map: DataFrame,
     cached RDD per invocation in long-lived drivers (no unpersist hook
     exists after the lazy output materializes).
     """
-    if broadcast_map is None:
-        broadcast_map = link_map.count() <= max_broadcast_rows
-    if broadcast_map:
+    if link_map.count() <= max_broadcast_rows:
         link_map = F.broadcast(link_map)
     ms = link_map.select(F.col("variant").alias("_vs"), F.col("canon").alias("_cs"))
     mo = link_map.select(F.col("variant").alias("_vo"), F.col("canon").alias("_co"))

@@ -938,35 +938,29 @@ SQL_KG_DEDUP = """
 
 
 def q_kg_connected_components(spark, sf):
-    """O-20: ALL THREE CC paths in one driver query — min-label
-    propagation, large-star/small-star contraction, and the
-    incremental fold (labels from ~80% of the edges; the remaining
-    ~20% folded in as a "new batch" by
+    """O-20: both CC paths in one driver query — min-label propagation
+    and the incremental fold (labels from ~80% of the edges; the
+    remaining ~20% folded in as a "new batch" by
     ``incremental_connected_components``, which reruns min-label CC
     over the prior labels' star edges plus the batch) — each tagged by
-    ``algo`` and checked against the same recursive-CTE reachability oracle,
-    so the driver verifies that every implementation agrees exactly.
+    ``algo`` and checked against the same recursive-CTE reachability
+    oracle, so the driver verifies that both agree exactly.
     The incremental branch's oracle needs no split replay: its
     contract is labels identical to the full recompute regardless of
     how the edge set is split.  Folded registrations keep every
     exact-oracle query inside the driver's 50-query budget."""
-    from kgspark.pipeline.graph import (
-        connected_components_star,
-        incremental_connected_components,
-    )
+    from kgspark.pipeline.graph import incremental_connected_components
     edges = relational.geo_graph_triples(spark, sf).select(
         F.col("subject").alias("src"), F.col("object").alias("dst")
     )
     minlabel = connected_components(edges).select(
         F.lit("minlabel").alias("algo"), "node", "component")
-    star = connected_components_star(edges).select(
-        F.lit("star").alias("algo"), "node", "component")
     is_new = F.pmod(F.xxhash64("src", "dst"), F.lit(5)) == 0
     old_e, new_e = edges.filter(~is_new), edges.filter(is_new)
     prev = connected_components(old_e)
     incr = incremental_connected_components(prev, new_e).select(
         F.lit("incremental").alias("algo"), "node", "component")
-    return minlabel.unionByName(star).unionByName(incr)
+    return minlabel.unionByName(incr)
 
 
 SQL_KG_CC = f"""
@@ -981,8 +975,6 @@ SQL_KG_CC = f"""
         SELECT u.a, reach.r FROM und u JOIN reach ON u.b = reach.node),
     cc AS (SELECT node, min(r) AS component FROM reach GROUP BY node)
     SELECT 'minlabel' AS algo, node, component FROM cc
-    UNION ALL
-    SELECT 'star' AS algo, node, component FROM cc
     UNION ALL
     SELECT 'incremental' AS algo, node, component FROM cc
 """

@@ -203,76 +203,27 @@ def test_cc_converges_on_long_path(spark):
     assert got == {(f"p{i:02d}", "p00") for i in range(64)}
 
 
-def test_star_cc_equals_minlabel_cc(spark):
-    """Large-star/small-star CC must produce exactly the min-label
-    component assignment on chains (worst case for label propagation),
-    cliques, and a random graph."""
-    import random
-
-    from kgspark.pipeline.graph import connected_components, connected_components_star
-
-    rng = random.Random(13)
-    edges = []
-    # long path (diameter 40) — the case star-contraction wins
-    edges += [(f"p{i:02d}", f"p{i+1:02d}") for i in range(40)]
-    # two cliques
-    for grp in ("x", "y"):
-        ids = [f"{grp}{i}" for i in range(6)]
-        edges += [(a, b) for i, a in enumerate(ids) for b in ids[i + 1:]]
-    # random sparse graph
-    nodes = [f"r{i:03d}" for i in range(120)]
-    edges += [(rng.choice(nodes), rng.choice(nodes)) for _ in range(100)]
-    df = spark.createDataFrame(
-        [e for e in edges if e[0] != e[1]], "src string, dst string")
-
-    want = {(r.node, r.component)
-            for r in connected_components(df).collect()}
-    got = {(r.node, r.component)
-           for r in connected_components_star(df).collect()}
-    assert got == want
-
-
 def test_cc_evaluates_input_once(spark, edges_df):
-    """Both CC variants read their input edges in two directions; the
-    input lineage (in the pipeline, the LSH self-join and its verifier)
-    must still run once per row, not once per direction or round.  An
-    accumulator in a UDF of the edge lineage counts the evaluations."""
+    """CC reads its input edges in two directions; the input lineage
+    (in the pipeline, the LSH self-join and its verifier) must still run
+    once per row, not once per direction or round.  An accumulator in a
+    UDF of the edge lineage counts the evaluations."""
     from pyspark.sql import functions as F
-
-    from kgspark.pipeline.graph import connected_components_star
 
     want = {(r.node, r.component)
             for r in connected_components(edges_df).collect()}
-    for algo in (connected_components, connected_components_star):
-        seen = spark.sparkContext.accumulator(0)
+    seen = spark.sparkContext.accumulator(0)
 
-        def count(v):
-            seen.add(1)
-            return v
+    def count(v):
+        seen.add(1)
+        return v
 
-        tagged = edges_df.select(
-            F.udf(count, "string")("src").alias("src"), "dst")
-        got = {(r.node, r.component)
-               for r in algo(tagged).collect()}
-        assert got == want, algo.__name__
-        assert seen.value == len(EDGES), (algo.__name__, seen.value)
-
-
-def test_star_cc_fallback_on_nonconvergence(spark):
-    """With max_iter too small to finish contracting a long path, the
-    star edge set is NOT well-formed; the well-formedness gate must
-    detect it and fall back to min-label CC instead of silently
-    returning conflicting labels (ADVICE r02 graph.py:91)."""
-    from kgspark.pipeline.graph import connected_components_star
-
-    edges = [(f"p{i:02d}", f"p{i+1:02d}") for i in range(40)]
-    df = spark.createDataFrame(edges, "src string, dst string")
+    tagged = edges_df.select(
+        F.udf(count, "string")("src").alias("src"), "dst")
     got = {(r.node, r.component)
-           for r in connected_components_star(df, max_iter=1).collect()}
-    want = {(f"p{i:02d}", "p00") for i in range(41)}
+           for r in connected_components(tagged).collect()}
     assert got == want
-    # one (node, component) row per node — no conflicting labels
-    assert len({n for n, _ in got}) == len(got)
+    assert seen.value == len(EDGES), seen.value
 
 
 def test_node_importance_matches_reference_formula(spark):

@@ -127,3 +127,31 @@ def test_link_entities_tfidf_mode(spark):
     # canonical pick: most frequent, then shortest, then lexical — all
     # three appear once, so the shortest form wins
     assert canons == {"acme holding"}
+
+
+LSH_ENTS = [
+    "Acme Holdings", "acme holdings", "ACME HOLDINGS", "acme  holdings",
+    "Zeta Corp", "zeta corp", "zeta corp ", "Beta Committee",
+    "beta committee", "alpha committee", "Gamma Ray", "gamma  ray",
+]
+
+
+def test_lsh_candidate_pairs_contract(spark):
+    """Entities whose token sets are equal (case variants; whitespace
+    variants differ in their char-3-grams) have equal signatures, so
+    they are candidates whatever the hashes; every pair comes out once
+    with e1 < e2; and bands > k is refused instead of making every pair
+    a candidate through empty bands."""
+    ents = spark.createDataFrame([(e,) for e in LSH_ENTS], "entity string")
+    got = [(r["e1"], r["e2"]) for r in
+           linking.lsh_candidate_pairs(ents, "entity", KgConfig()).collect()]
+    assert len(got) == len(set(got))
+    assert all(e1 < e2 for e1, e2 in got)
+    same = {tuple(sorted((a, b))) for i, a in enumerate(LSH_ENTS)
+            for b in LSH_ENTS[i + 1:] if _py_tokens(a) == _py_tokens(b)}
+    assert ("ACME HOLDINGS", "Acme Holdings") in same
+    assert len(same) == 5
+    assert same <= set(got)
+    with pytest.raises(ValueError, match="bands"):
+        linking.lsh_candidate_pairs(
+            ents, "entity", KgConfig(lsh_num_hashes=4, lsh_bands=8))

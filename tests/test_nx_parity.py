@@ -24,7 +24,6 @@ from kgspark.pipeline.graph import (
     betweenness_centrality_small,
     clustering_coefficients,
     connected_components,
-    connected_components_star,
     degrees,
     eigenvector_centrality,
     louvain,
@@ -103,12 +102,10 @@ def test_connected_components_match_nx(spark):
     )
     df = spark.createDataFrame(edges, "src string, dst string")
     want = {frozenset(c) for c in nx.connected_components(_nx_graph(edges))}
-    for algo in (connected_components, connected_components_star):
-        rows = algo(df).collect()
-        by_comp: dict[str, set[str]] = {}
-        for r in rows:
-            by_comp.setdefault(r.component, set()).add(r.node)
-        assert {frozenset(v) for v in by_comp.values()} == want
+    by_comp: dict[str, set[str]] = {}
+    for r in connected_components(df).collect():
+        by_comp.setdefault(r.component, set()).add(r.node)
+    assert {frozenset(v) for v in by_comp.values()} == want
 
 
 def test_eigenvector_matches_nx(spark, web_df, web_g):

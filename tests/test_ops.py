@@ -80,6 +80,13 @@ def test_hot_shingle_cap(spark):
     assert 0.5 <= capped[(1, 2)] < 1.0  # intersection lost the boilerplate
 
 
+def test_lsh_refuses_more_bands_than_hashes(spark, docs):
+    """bands > k leaves bands with no hash in them (the column path would
+    reference h4..h7 of a 4-hash signature): refused up front."""
+    with pytest.raises(ValueError, match="bands"):
+        dedupe.lsh_dup_pairs(docs, "doc_id", "text", n=3, k=4, bands=8)
+
+
 def test_minhash_md5_xxhash_consistent_shape(spark, docs):
     sig = dedupe.minhash_signature(docs, "doc_id", "text", n=3, k=4, hash_fn="md5")
     row = sig.limit(1).collect()[0]

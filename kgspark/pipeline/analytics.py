@@ -284,31 +284,25 @@ def node_importance(triples: DataFrame, max_betweenness_nodes: int = 20000,
     visualization.py:207-227): importance = 0.5·deĝ + 0.3·btŵ + 0.2·eiĝ
     (each max-normalized), size = 10 + 20·importance.
 
-    Degree and eigenvector are distributed.  Betweenness is exact
-    driver-side Brandes up to ``max_betweenness_nodes`` (the reference's
-    networkx call, visualization.py:168 — viz-scale graphs) and switches
-    to the distributed k-source sampled Brandes
-    (graph.betweenness_centrality_sampled, deterministic top-degree
-    pivots) beyond it — no raise path at corpus scale.  Returns
-    (node, degree, importance, size)."""
+    Degree and eigenvector are distributed, and so is betweenness
+    (graph.betweenness_centrality, one Brandes): exact up to
+    ``max_betweenness_nodes`` nodes (the reference's networkx call,
+    visualization.py:168 — viz-scale graphs), and the ``btw_k_sources``
+    top-degree pivots beyond it — no raise path at corpus scale.
+    Returns (node, degree, importance, size)."""
     from kgspark.pipeline.graph import (
-        betweenness_centrality_sampled,
-        betweenness_centrality_small,
+        betweenness_centrality,
         degrees,
         eigenvector_centrality,
     )
 
     edges = triples.select(F.col("subject").alias("src"), F.col("object").alias("dst"))
     deg = degrees(edges)
-    eig = eigenvector_centrality(edges, max_iter=30, tol=None).withColumnRenamed(
+    eig = eigenvector_centrality(edges).withColumnRenamed(
         "centrality", "eig")
-    spark = triples.sparkSession
-    if deg.count() <= max_betweenness_nodes:
-        btw = betweenness_centrality_small(edges, max_nodes=max_betweenness_nodes)
-        btw_df = spark.createDataFrame(
-            [(k, float(v)) for k, v in btw.items()], "node string, btw double")
-    else:
-        btw_df = betweenness_centrality_sampled(edges, k_sources=btw_k_sources)
+    exact = deg.count() <= max_betweenness_nodes
+    btw_df = betweenness_centrality(
+        edges, k_sources=None if exact else btw_k_sources)
 
     joined = deg.join(eig, "node", "left").join(btw_df, "node", "left") \
         .na.fill({"eig": 0.0, "btw": 0.0})

@@ -119,10 +119,15 @@ def within_community_triples(
         "component", "node",
         F.explode(F.split(F.lower("node"), r"\s+")).alias("w"),
     ).filter(F.col("w") != "")
-    l = words.select(F.col("component").alias("c"), F.col("node").alias("a"), "w")
-    r = words.select(F.col("component").alias("c2"), F.col("node").alias("b"), "w")
+    # every column aliased per side: both sides derive from words, and an
+    # equality on one lineage's column would resolve to a trivially true
+    # 'w == w'
+    l = words.select(F.col("component").alias("c"), F.col("node").alias("a"),
+                     F.col("w").alias("wa"))
+    r = words.select(F.col("component").alias("c2"), F.col("node").alias("b"),
+                     F.col("w").alias("wb"))
     cand = (
-        l.join(r, (l["c"] == r["c2"]) & (l["w"] == r["w"]) & (l["a"] < r["b"]))
+        l.join(r, (l["c"] == r["c2"]) & (l["wa"] == r["wb"]) & (l["a"] < r["b"]))
         .select("c", "a", "b")
         .distinct()
     )

@@ -153,30 +153,19 @@ def eigenvector_centrality(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 30,
-    tol: float | None = 1e-6,
-    raise_on_no_convergence: bool = False,
 ) -> DataFrame:
     """Eigenvector centrality by power iteration over the undirected
     simple graph — iterative join-agg (the PageRank skeleton), reference
     analog: networkx eigenvector_centrality at visualization.py:170-177
     (max_iter=1000 driver-side; ours distributes).
 
-    Convergence is the networkx rule — L1 delta of the iterate,
-    ``sum(|x_new - x_old|) < n * tol`` — not a norm-estimate comparison,
-    which oscillating bipartite/periodic iterates can fool (two distinct
-    vectors with equal norms).  The delta test runs every 2 iterations
-    (batched like connected_components' convergence checks), and lineage
-    is cut every 5: each skipped check saves one driver-synchronous
-    job per iteration — on a real cluster a full scheduling round-trip —
-    and batching can only ever run EXTRA iterations past convergence,
-    never stop short, so the returned iterate is at least as converged.
-    ``tol=None`` runs exactly ``max_iter``
-    iterations (deterministic, SQL-replayable — the oracle mode).
-    ``raise_on_no_convergence`` surfaces hitting max_iter without
-    converging, like networkx's PowerIterationFailedConvergence.
+    Runs exactly ``max_iter`` normalized iterations, with no convergence
+    test: deterministic and SQL-replayable (the oracle mode), and on
+    networkx's 24-node web-graph test within 5e-9 of its tight-tolerance
+    result after the default 30.  Lineage is cut every 5 iterations.
 
-    Returns (node, centrality) with the L2-normalized dominant
-    eigenvector, like networkx; no rows for an empty edge set."""
+    Returns (node, centrality) with the L2-normalized iterate, like
+    networkx; no rows for an empty edge set."""
     und = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -189,42 +178,24 @@ def eigenvector_centrality(
         und.unpersist()
         return edges.sparkSession.createDataFrame(
             [], "node string, centrality double")
-    x = nodes.withColumn("score", F.lit(1.0 / (n ** 0.5))).persist()
-
-    converged = False
+    x = nodes.withColumn("score", F.lit(1.0 / (n ** 0.5)))
+    y = None
     for it in range(max_iter):
-        # y = A x  (sum neighbor scores); every node has >=1 und neighbor
+        # y = A x  (sum neighbor scores); every node has >=1 und neighbor,
+        # so y > 0 and its norm never vanishes.  y is cached before the
+        # norm job fills it, so the next iterate reads it rather than
+        # recomputing the iterations back to the last cut
+        prev = y
         y = (
             und.join(x, und["b"] == x["node"])
             .groupBy(und["a"].alias("node"))
             .agg(F.sum("score").alias("raw"))
         )
+        y = y.localCheckpoint(eager=True) if (it + 1) % 5 == 0 else y.persist()
         norm = y.agg(F.sqrt(F.sum(F.col("raw") * F.col("raw")))).collect()[0][0]
-        if not norm:
-            break
-        new_x = y.select("node", (F.col("raw") / F.lit(norm)).alias("score"))
-        if (it + 1) % 5 == 0:
-            new_x = new_x.localCheckpoint(eager=True)
-        new_x = new_x.persist()
-        # the final iteration always checks: convergence reached on an
-        # odd last round must not raise a spurious no-convergence error
-        if tol is not None and ((it + 1) % 2 == 0 or it == max_iter - 1):
-            delta = (
-                new_x.withColumnRenamed("score", "s_new")
-                .join(x, "node")
-                .agg(F.sum(F.abs(F.col("s_new") - F.col("score"))).alias("d"))
-                .collect()[0][0]
-            )
-            converged = delta is not None and delta < n * tol
-        x.unpersist()
-        x = new_x
-        if converged:
-            break
-    if tol is not None and not converged and raise_on_no_convergence:
-        raise RuntimeError(
-            f"eigenvector_centrality did not converge within {max_iter} "
-            f"iterations (tol={tol})"
-        )
+        if prev is not None:
+            prev.unpersist()
+        x = y.select("node", (F.col("raw") / F.lit(norm)).alias("score"))
     und.unpersist()
     return x.select("node", F.col("score").alias("centrality"))
 
@@ -527,307 +498,126 @@ def louvain(
     return assign.select(F.col("orig").alias("node"), "community")
 
 
-def betweenness_centrality_sampled(
+def betweenness_centrality(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    k_sources: int | None = 64,
+    k_sources: int | None = None,
     normalized: bool = True,
-    max_depth: int = 60,
     group_col: str | None = None,
-    require_converged: bool = False,
 ) -> DataFrame:
-    """Approximate betweenness centrality for LARGE graphs: k-source
-    Brandes (Brandes & Pich 2007 pivot sampling) as a fully distributed
-    iterative DataFrame BFS — the scale path `node_importance` takes when
-    the graph exceeds the driver-side `betweenness_centrality_small`
-    guard (reference analog stays networkx-exact at viz scale,
-    visualization.py:168).
+    """Betweenness centrality by Brandes (2001) as a distributed
+    level-synchronous BFS over the undirected simple graph (reference
+    analog: networkx betweenness at visualization.py:168 and the per-year
+    loop at policy_comparative_analyzer.py:139-151).
 
-    Sources are picked DETERMINISTICALLY: the `k_sources` highest-degree
-    nodes (ties broken by smallest node id) — reproducible across runs,
-    and high-degree pivots empirically dominate shortest-path mass in
-    the skewed web/KG graphs this pipeline builds.  With
-    ``k_sources >= n`` every node is a source and the result equals
-    exact Brandes (the unit tests rely on this identity).
+    ``k_sources=None`` makes every node a source: exact betweenness.  An
+    integer picks the ``k_sources`` highest-degree nodes (ties: smallest
+    id) as pivots (Brandes & Pich 2007), a deterministic approximation
+    scaled by n / k_eff.  All sources advance in ONE wave per BFS level,
+    so the job count is O(diameter), not O(sources · diameter).
 
-    Algorithm (all stages are joins/groupBys over (source, node) keyed
-    frames — k sources advance in ONE wave per BFS depth, so the job
-    count is O(diameter), not O(k·diameter)):
+      forward:  level_{d+1} = neighbours of level_d minus levels d and
+                d-1 (und is symmetric, so a level-d node's neighbours
+                lie at levels d-1, d and d+1), sigma summed over
+                predecessors (path counts); runs until a level is empty;
+      backward: for d = D-1..1, delta_v = Σ_w σ_v/σ_w · (1+delta_w)
+                over BFS-tree edges (v at d, w at d+1);
+      credit:   bc_v = Σ over sources and levels 1..D-1 of delta_v.
 
-      forward:  frontier_{d+1} = (frontier_d ⋈ edges) ∖ visited,
-                sigma summed over predecessors (path counts);
-      backward: for d = D..1, delta_v += Σ_w σ_v/σ_w · (1+delta_w)
-                over BFS-tree edges (v at d-1, w at d);
-                bc_w += delta_w for every non-source w.
+    Each level is one eager ``localCheckpoint``, so no level's plan
+    nests the plans of the levels before it.  The sum is halved for the
+    undirected double count and, when ``normalized`` and n > 2, scaled
+    by 1/((n-1)(n-2)), like networkx.
 
-    Estimator: bc_est(v) = (n / k_eff) · Σ_{s∈sample} delta_s(v),
-    scaled like the exact variant (÷2 for the undirected double count,
-    ×1/((n-1)(n-2)) when ``normalized``) — an unbiased estimate under
-    uniform sampling, a deterministic pivot approximation here.
+    ``group_col`` names a column on ``edges`` whose groups are
+    independent graphs; every join and groupBy key carries the group, so
+    N per-period graphs advance in one wave, and sources, k_eff and n
+    are per group.
 
-    ``k_sources=None`` makes EVERY node a source (exact Brandes without
-    counting the nodes first).  ``group_col`` names a grouping column
-    on ``edges``: each group is an independent graph and every
-    join/groupBy key carries the group, so N per-period graphs advance
-    in ONE BFS wave per depth instead of N sequential jobs (reference
-    analog: the per-year networkx betweenness loop at
-    policy_comparative_analyzer.py:139-151).  Sources, k_eff and the
-    normalization n are then all per-group.
-
-    ``require_converged`` guards the BFS horizon (VERDICT r4 item 4):
-    when the wave still has a live frontier at ``max_depth``, one extra
-    level is probed and, if non-empty, ValueError is raised instead of
-    silently truncating shortest paths — callers whose oracle unrolls
-    the same fixed horizon (kg_period_betweenness) pass True so a
-    diameter beyond the horizon can never produce a wrong-but-matching
-    pair of results; auto-extending is deliberately NOT offered there
-    because the SQL replay cannot extend with it.
-
-    Returns a DataFrame ([group,] node, btw) covering every node
-    (unreached → 0).
+    Returns ([group,] node, btw) covering every node (unreached → 0).
     """
     spark = edges.sparkSession
     # one code path: a constant group key when ungrouped (dropped on
-    # return) — the per-group estimator then degenerates to the scalars
+    # return).  und's group column is named "ug", not "g": every BFS
+    # frame derives from und, and a same-named equi-join condition would
+    # be an ambiguous self-join reference
     gsrc = F.col(group_col) if group_col else F.lit("")
-    # und's group column is named "ug" (not "g"): every BFS frame derives
-    # from und, so a same-named equi-join condition would be flagged as an
-    # ambiguous self-join reference — distinct names keep each join
-    # condition resolvable
+    # cut the caller's lineage once: every level joins und, and would
+    # otherwise re-analyze the caller's whole plan
     und = (
         edges.select(gsrc.alias("ug"), F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(gsrc.alias("ug"), F.col(dst).alias("a"),
                             F.col(src).alias("b")))
         .filter(F.col("a") != F.col("b"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    # cut the CALLER's lineage once before looping: every BFS level joins
-    # und, so the per-level logical plan would otherwise embed the input's
-    # full subtree O(depth) times — with a complex upstream (e.g. the
-    # per-period triples join) Catalyst re-analysis dominates wall time
-    # long before any executor works (same hazard the CC loops fixed);
-    # the BFS frames are then cut every 4 levels
-    und = und.localCheckpoint(eager=True).persist()
-    all_nodes = und.select(F.col("ug").alias("g"),
-                           F.col("a").alias("node")).distinct().persist()
-    n = all_nodes.count()
-    if n == 0:
-        und.unpersist()
-        all_nodes.unpersist()
+    if und.isEmpty():
         schema = (f"{group_col} string, " if group_col else "") + \
             "node string, btw double"
         return spark.createDataFrame([], schema)
-
     deg = und.groupBy(F.col("ug").alias("g"), F.col("a").alias("node")).agg(
         F.count("*").alias("degree"))
-    # No static broadcast hint here: the sources subtree also feeds unions
-    # and aggregates (where a join hint is dropped with a warning), and the
-    # frontier frames derived from it GROW level by level — AQE picks
-    # broadcast for the genuinely small sides from runtime stats instead.
-    rank_w = Window.partitionBy("g").orderBy(F.col("degree").desc(), F.col("node"))
-    ranked = deg.withColumn("_rk", F.row_number().over(rank_w))
+    sources = deg.select("g", F.col("node").alias("source"))
     if k_sources is not None:
-        ranked = ranked.filter(F.col("_rk") <= k_sources)
-    sources = ranked.select("g", F.col("node").alias("source"))
-    # per-group n and k_eff for the estimator scale (tiny: one row per
-    # group; broadcast into the final join)
-    ncnt = all_nodes.groupBy("g").agg(F.count("*").alias("_n"))
-    keff = sources.groupBy("g").agg(F.count("*").alias("_keff"))
+        rank_w = Window.partitionBy("g").orderBy(F.col("degree").desc(), F.col("node"))
+        sources = (deg.withColumn("_rk", F.row_number().over(rank_w))
+                   .filter(F.col("_rk") <= k_sources)
+                   .select("g", F.col("node").alias("source")))
+    keys = ["g", "source", "node"]
 
-    # ---- forward BFS: visited = (g, source, node, dist, sigma) ----
-    frontier = sources.select(
-        "g", "source", F.col("source").alias("node"),
-        F.lit(0).alias("dist"), F.lit(1.0).alias("sigma"),
-    ).persist()
-    visited = frontier
-    per_level: list[DataFrame] = [frontier]
-    d = 0
-    converged = False
-    while d < max_depth:
+    # ---- forward BFS: levels[d] = (g, source, node, sigma) at distance d
+    levels = [sources.select("g", "source", F.col("source").alias("node"),
+                             F.lit(1.0).alias("sigma"))
+              .localCheckpoint(eager=True)]
+    while True:
+        cur = levels[-1]
         nxt = (
-            frontier.join(und, (frontier["g"] == und["ug"])
-                          & (frontier["node"] == und["a"]))
+            cur.join(und, (cur["g"] == und["ug"]) & (cur["node"] == und["a"]))
             .select("g", "source", F.col("b").alias("node"), "sigma")
-            .join(visited.select("g", "source", "node"),
-                  ["g", "source", "node"], "left_anti")
-            .groupBy("g", "source", "node")
-            .agg(F.sum("sigma").alias("sigma"))
-            .withColumn("dist", F.lit(d + 1))
-            .select("g", "source", "node", "dist", "sigma")
+            .join(cur.select(*keys), keys, "left_anti")
         )
-        if (d + 1) % 4 == 0:
-            nxt = nxt.localCheckpoint(eager=True)
-        nxt = nxt.persist()
+        if len(levels) > 1:
+            nxt = nxt.join(levels[-2].select(*keys), keys, "left_anti")
+        nxt = (nxt.groupBy(*keys).agg(F.sum("sigma").alias("sigma"))
+               .localCheckpoint(eager=True))
         if nxt.isEmpty():
-            nxt.unpersist()
-            converged = True
             break
-        new_visited = visited.union(nxt)
-        if (d + 1) % 4 == 0:
-            new_visited = new_visited.localCheckpoint(eager=True)
-        new_visited = new_visited.persist()
-        if visited is not frontier:
-            visited.unpersist()
-        visited = new_visited
-        frontier = nxt
-        d += 1
-        per_level.append(nxt)
+        levels.append(nxt)
 
-    if require_converged and not converged:
-        # probe ONE level past the horizon: a non-empty frontier there
-        # means real shortest paths were truncated — fail loudly rather
-        # than return silently-wrong centralities
-        probe = (
-            frontier.join(und, (frontier["g"] == und["ug"])
-                          & (frontier["node"] == und["a"]))
-            .select("g", "source", F.col("b").alias("node"))
-            .join(visited.select("g", "source", "node"),
-                  ["g", "source", "node"], "left_anti")
+    # ---- backward: delta frames for levels D-1..1, deepest first
+    deltas: list[DataFrame] = []
+    delta = levels[-1].withColumn("delta", F.lit(0.0))
+    for lvl in reversed(levels[1:-1]):
+        up = delta.join(und, (delta["g"] == und["ug"]) & (delta["node"] == und["b"])) \
+            .select("g", "source", F.col("a").alias("node"),
+                    ((F.lit(1.0) + F.col("delta")) / F.col("sigma")).alias("wt"))
+        delta = (
+            lvl.join(up, keys, "left")
+            .groupBy(*keys, "sigma")
+            .agg(F.coalesce(F.sum(F.col("sigma") * F.col("wt")), F.lit(0.0))
+                 .alias("delta"))
+            .localCheckpoint(eager=True)
         )
-        if not probe.isEmpty():
-            raise ValueError(
-                f"BFS frontier still live past max_depth={max_depth}: the "
-                "graph diameter exceeds the horizon; raise max_depth (and "
-                "any oracle unrolled to the same depth) instead of "
-                "accepting truncated betweenness")
+        deltas.append(delta)
 
-    # ---- backward accumulation over BFS-tree edges, deepest first ----
-    bc_parts: list[DataFrame] = []
-    delta = None  # (source, node, delta) at the current level
-    for dd in range(d, 0, -1):
-        w_level = per_level[dd]
-        if delta is None:
-            w_frontier = w_level.withColumn("delta", F.lit(0.0))
-        else:
-            w_frontier = (
-                w_level.join(delta, ["g", "source", "node"], "left")
-                .na.fill({"delta": 0.0})
-            )
-        w_frontier = w_frontier.persist()
-        # credit: every non-source w at this level adds delta_w to bc[w]
-        bc_parts.append(
-            w_frontier.filter(F.col("node") != F.col("source"))
-            .select("g", "node", F.col("delta").alias("c"))
-        )
-        prev = per_level[dd - 1].select(
-            "g", "source", F.col("node").alias("vnode"),
-            F.col("sigma").alias("sigma_v"),
-        )
-        new_delta = (
-            w_frontier.join(und, (w_frontier["g"] == und["ug"])
-                            & (w_frontier["node"] == und["b"]))
-            .select(
-                "g", "source", F.col("a").alias("vnode"),
-                ((F.lit(1.0) + F.col("delta")) / F.col("sigma")).alias("wt"),
-            )
-            .join(prev, ["g", "source", "vnode"])
-            .groupBy("g", "source", F.col("vnode").alias("node"))
-            .agg(F.sum(F.col("sigma_v") * F.col("wt")).alias("delta"))
-        )
-        if (d - dd + 1) % 4 == 0:
-            new_delta = new_delta.localCheckpoint(eager=True)
-        new_delta = new_delta.persist()
-        new_delta.count()  # fill the cache before unpersisting inputs
-        if delta is not None:
-            delta.unpersist()
-        w_frontier.unpersist()
-        delta = new_delta
-
-    # per-group estimator scale: factor = n_g/k_eff_g; ÷2 undirected
-    # double count; ×1/((n_g-1)(n_g-2)) when normalized and n_g > 2
+    # per-group scale: n_g / k_eff_g (1 when exact); ÷2 for the undirected
+    # double count, or ×1/((n_g-1)(n_g-2)) when normalized and n_g > 2
+    sizes = deg.groupBy("g").agg(F.count("*").alias("_n")).join(
+        sources.groupBy("g").agg(F.count("*").alias("_keff")), "g")
     factor = F.col("_n") / F.col("_keff")
     scale = F.when(
         F.lit(normalized) & (F.col("_n") > 2),
         factor / ((F.col("_n") - 1) * (F.col("_n") - 2)),
     ).otherwise(F.lit(0.5) * factor)
-    if bc_parts:
-        acc = bc_parts[0]
-        for p in bc_parts[1:]:
-            acc = acc.union(p)
-        bc = (
-            acc.groupBy("g", "node").agg(F.sum("c").alias("_c"))
-            .join(F.broadcast(ncnt), "g").join(F.broadcast(keff), "g")
-            .select("g", "node", (F.col("_c") * scale).alias("btw"))
-        )
-    else:
-        bc = spark.createDataFrame([], "g string, node string, btw double")
-    # cut lineage from the soon-unpersisted BFS frames
-    out = all_nodes.join(bc, ["g", "node"], "left").na.fill({"btw": 0.0})
-    out = out.select(F.col("g").alias(group_col), "node", "btw") if group_col \
-        else out.select("node", "btw")
-    out = out.localCheckpoint(eager=True)
-    if delta is not None:
-        delta.unpersist()
-    for lvl in per_level:
-        lvl.unpersist()
-    if visited is not frontier:
-        visited.unpersist()
-    und.unpersist()
-    all_nodes.unpersist()
-    return out
-
-
-def betweenness_centrality_small(
-    edges: DataFrame, src: str = "src", dst: str = "dst",
-    max_nodes: int = 20000, normalized: bool = True,
-) -> dict[str, float]:
-    """Betweenness centrality for SMALL graphs, computed driver-side with
-    Brandes' algorithm over the collected undirected edge list (reference
-    analog: networkx betweenness at visualization.py:168 /
-    policy_comparative_analyzer.py:139 — per-period subgraphs are small).
-
-    Deliberately NOT distributed (SURVEY §2 A-9 note): exact distributed
-    betweenness is all-pairs-shortest-paths-shaped; at corpus scale use
-    degree/eigenvector instead.  Guarded by ``max_nodes``.
-    """
-    from collections import deque
-
-    rows = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .collect()
+    credit = deg.select("g", "node", F.lit(0.0).alias("delta"))
+    for part in deltas:
+        credit = credit.union(part.select("g", "node", "delta"))
+    out = (
+        credit.groupBy("g", "node").agg(F.sum("delta").alias("_c"))
+        .join(F.broadcast(sizes), "g")
+        .select("g", "node", (F.col("_c") * scale).alias("btw"))
     )
-    adj: dict[str, set[str]] = {}
-    for r in rows:
-        adj.setdefault(r.a, set()).add(r.b)
-        adj.setdefault(r.b, set()).add(r.a)
-    nodes = sorted(adj)
-    if len(nodes) > max_nodes:
-        raise ValueError(
-            f"betweenness_centrality_small is driver-side only; graph has "
-            f"{len(nodes)} nodes > max_nodes={max_nodes}"
-        )
-    bc = dict.fromkeys(nodes, 0.0)
-    for s in nodes:  # Brandes 2001
-        stack: list[str] = []
-        pred: dict[str, list[str]] = {v: [] for v in nodes}
-        sigma = dict.fromkeys(nodes, 0.0)
-        dist = dict.fromkeys(nodes, -1)
-        sigma[s] = 1.0
-        dist[s] = 0
-        queue = deque([s])
-        while queue:
-            v = queue.popleft()
-            stack.append(v)
-            for w in sorted(adj[v]):
-                if dist[w] < 0:
-                    dist[w] = dist[v] + 1
-                    queue.append(w)
-                if dist[w] == dist[v] + 1:
-                    sigma[w] += sigma[v]
-                    pred[w].append(v)
-        delta = dict.fromkeys(nodes, 0.0)
-        while stack:
-            w = stack.pop()
-            for v in pred[w]:
-                delta[v] += sigma[v] / sigma[w] * (1.0 + delta[w])
-            if w != s:
-                bc[w] += delta[w]
-        # undirected: every pair counted twice
-    n = len(nodes)
-    scale = 0.5
-    if normalized and n > 2:
-        scale = 1.0 / ((n - 1) * (n - 2))
-    return {v: bc[v] * scale for v in nodes}
+    return out.select(F.col("g").alias(group_col), "node", "btw") if group_col \
+        else out.select("node", "btw")

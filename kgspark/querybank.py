@@ -478,11 +478,12 @@ SQL_KG_PERIOD_TOP_CENTRAL = f"""
 """
 
 
-# shared BFS horizon for the Spark query and the unrolled SQL oracle:
-# the per-period event graphs have a fixed shape (entity-variant stars,
-# diameter 4 at every sf — structure is scale-invariant), so 8 levels
-# carries margin while keeping the two engines truncation-identical by
-# construction
+# unroll depth of the SQL oracle's BFS.  Spark's Brandes runs to the end
+# of each period graph; the per-period event graphs are entity-variant
+# stars of diameter 4 at every sf (structure is scale-invariant), so 8
+# levels carry margin.  A period graph deeper than this makes the oracle
+# truncate while Spark stays exact: a mismatch, never a wrong result that
+# still matches
 _BTW_DEPTH = 8
 
 
@@ -491,15 +492,12 @@ def q_kg_period_betweenness(spark, sf):
     centrality (reference policy_comparative_analyzer.py:139-151 loops
     networkx betweenness per year; here all periods advance in ONE
     grouped all-sources distributed Brandes wave —
-    graph.betweenness_centrality_sampled(k_sources=None,
-    group_col='period'))."""
-    from kgspark.pipeline.graph import betweenness_centrality_sampled
+    graph.betweenness_centrality(group_col='period'))."""
+    from kgspark.pipeline.graph import betweenness_centrality
     trip = _event_period_triples(spark, sf)
     edges = trip.select("period", F.col("subject").alias("src"),
                         F.col("object").alias("dst"))
-    out = betweenness_centrality_sampled(
-        edges, k_sources=None, normalized=False, max_depth=_BTW_DEPTH,
-        group_col="period", require_converged=True)
+    out = betweenness_centrality(edges, normalized=False, group_col="period")
     ranked = out.select("period", F.col("node").alias("entity"),
                         F.round("btw", 6).alias("btw"))
     w = Window.partitionBy("period").orderBy(F.desc("btw"), "entity")
@@ -2281,20 +2279,21 @@ _EIG_ITERS = 30
 
 def q_kg_eigenvector(spark, sf):
     """A-15: eigenvector centrality by distributed power iteration over
-    the geo graph.  Fixed-iteration mode (tol=None) so DuckDB replays the
-    exact same 30 normalized iterations; also numpy-verified in pytest."""
+    the geo graph.  It runs a fixed number of iterations, so DuckDB
+    replays the exact same 30 normalized iterations; also numpy-verified
+    in pytest."""
     from kgspark.pipeline.graph import eigenvector_centrality
     edges = relational.geo_graph_triples(spark, sf).select(
         F.col("subject").alias("src"), F.col("object").alias("dst")
     )
-    out = eigenvector_centrality(edges, max_iter=_EIG_ITERS, tol=None)
+    out = eigenvector_centrality(edges, max_iter=_EIG_ITERS)
     return out.select("node", F.round("centrality", 4).alias("centrality")) \
               .orderBy(F.desc("centrality"), "node").limit(25)
 
 
 def _eigenvector_sql(iters: int) -> str:
     """Unrolled power iteration: x_{k+1} = A x_k / ||A x_k||_2, replaying
-    eigenvector_centrality(tol=None) CTE-by-CTE (recursive CTEs cannot
+    eigenvector_centrality CTE-by-CTE (recursive CTEs cannot
     aggregate over the prior iterate, so the loop is unrolled)."""
     # MATERIALIZED: DuckDB would otherwise inline trip/und into all 30
     # iterations and re-open the parquet files past the fd limit

@@ -1,5 +1,6 @@
 """Graph-algorithm correctness: eigenvector centrality vs numpy dense
-power iteration; triangle/clustering vs brute force."""
+power iteration; triangle/clustering vs brute force; betweenness vs the
+plain-Python Brandes in tests/oracle/brandes.py."""
 
 from __future__ import annotations
 
@@ -9,11 +10,13 @@ import numpy as np
 import pytest
 
 from kgspark.pipeline.graph import (
+    betweenness_centrality,
     clustering_coefficients,
     connected_components,
     eigenvector_centrality,
     triangle_counts,
 )
+from tests.oracle import brandes
 
 EDGES = [
     ("a", "b"), ("b", "c"), ("a", "c"),      # triangle abc
@@ -30,7 +33,7 @@ def edges_df(spark):
 
 def test_eigenvector_matches_numpy(spark, edges_df):
     got = {r.node: r.centrality
-           for r in eigenvector_centrality(edges_df, max_iter=100, tol=0.0).collect()}
+           for r in eigenvector_centrality(edges_df, max_iter=100).collect()}
     nodes = sorted({n for e in EDGES for n in e})
     idx = {n: i for i, n in enumerate(nodes)}
     A = np.zeros((len(nodes), len(nodes)))
@@ -79,8 +82,7 @@ def test_betweenness_path_graph(spark):
     # b and c each sit on 2 of the (n-1)(n-2)=6 ordered pairs' paths ->
     # raw 2 pairs counted once per direction = 2; scale 1/6 -> 1/3
     df = spark.createDataFrame([("a", "b"), ("b", "c"), ("c", "d")], ["src", "dst"])
-    from kgspark.pipeline.graph import betweenness_centrality_small
-    bc = betweenness_centrality_small(df)
+    bc = {r.node: r.btw for r in betweenness_centrality(df).collect()}
     assert bc["a"] == 0.0 and bc["d"] == 0.0
     assert bc["b"] == pytest.approx(2 / 3)
     assert bc["c"] == pytest.approx(2 / 3)
@@ -89,64 +91,45 @@ def test_betweenness_path_graph(spark):
 def test_betweenness_star(spark):
     df = spark.createDataFrame(
         [("hub", "x1"), ("hub", "x2"), ("hub", "x3")], ["src", "dst"])
-    from kgspark.pipeline.graph import betweenness_centrality_small
-    bc = betweenness_centrality_small(df)
+    bc = {r.node: r.btw for r in betweenness_centrality(df).collect()}
     assert bc["hub"] == pytest.approx(1.0)
     assert bc["x1"] == 0.0
 
 
 def test_sampled_betweenness_all_sources_equals_exact(spark, edges_df):
-    """With k_sources >= n the k-source sampled Brandes sums over every
-    source, so it must equal exact Brandes to float precision (VERDICT
-    r02 item 6)."""
-    from kgspark.pipeline.graph import (
-        betweenness_centrality_sampled, betweenness_centrality_small)
-
-    exact = betweenness_centrality_small(edges_df)
-    got = {r.node: r.btw for r in betweenness_centrality_sampled(
+    """With k_sources >= n the pivots are every node, so the result must
+    equal exact Brandes to float precision (VERDICT r02 item 6)."""
+    exact = brandes.betweenness(EDGES)
+    got = {r.node: r.btw for r in betweenness_centrality(
         edges_df, k_sources=10**6).collect()}
     assert set(got) == set(exact)
     for node, want in exact.items():
         assert got[node] == pytest.approx(want, abs=1e-9), node
 
 
-def test_sampled_betweenness_horizon_guard(spark):
-    """VERDICT r4 item 4: a path graph whose diameter exceeds max_depth
-    must RAISE under require_converged (silent truncation would return
-    wrong-but-plausible centralities that a same-depth-unrolled oracle
-    could never catch); a converged wave under the same flag, and the
-    unguarded default, stay unchanged."""
-    from kgspark.pipeline.graph import betweenness_centrality_sampled
-    from kgspark.querybank import _BTW_DEPTH
-
-    # path n0-n1-...-n12: diameter 12 > _BTW_DEPTH (8)
-    edges = [(f"n{i}", f"n{i+1}") for i in range(_BTW_DEPTH + 4)]
+def test_betweenness_exact_on_long_path(spark):
+    """The BFS runs to the end of the graph: on a 64-node path (diameter
+    63, beyond any fixed depth horizon) exact betweenness matches the
+    reference, whose middle nodes carry the most shortest paths."""
+    edges = [(f"p{i:02d}", f"p{i + 1:02d}") for i in range(63)]
     df = spark.createDataFrame(edges, "src string, dst string")
-    with pytest.raises(ValueError, match="max_depth"):
-        betweenness_centrality_sampled(
-            df, k_sources=None, max_depth=_BTW_DEPTH, require_converged=True)
-    # unguarded: truncates silently (documented legacy behavior)
-    assert betweenness_centrality_sampled(
-        df, k_sources=None, max_depth=_BTW_DEPTH).count() == len(edges) + 1
-    # guarded but converged: a deep-enough horizon passes
-    out = betweenness_centrality_sampled(
-        df, k_sources=None, max_depth=len(edges) + 1, require_converged=True)
-    assert out.count() == len(edges) + 1
+    got = {r.node: r.btw for r in betweenness_centrality(df).collect()}
+    want = brandes.betweenness(edges)
+    assert set(got) == set(want) and len(want) == 64
+    for node, w in want.items():
+        assert got[node] == pytest.approx(w, abs=1e-9), node
 
 
 def test_sampled_betweenness_all_sources_exact_barbell(spark):
     """Barbell (two triangles joined by a path): bridge nodes carry all
     the betweenness; k=n identity again, on a graph with heavy
     path-dependence."""
-    from kgspark.pipeline.graph import (
-        betweenness_centrality_sampled, betweenness_centrality_small)
-
     edges = [("a1", "a2"), ("a2", "a3"), ("a1", "a3"),
              ("b1", "b2"), ("b2", "b3"), ("b1", "b3"),
              ("a1", "m1"), ("m1", "m2"), ("m2", "b1")]
     df = spark.createDataFrame(edges, "src string, dst string")
-    exact = betweenness_centrality_small(df)
-    got = {r.node: r.btw for r in betweenness_centrality_sampled(
+    exact = brandes.betweenness(edges)
+    got = {r.node: r.btw for r in betweenness_centrality(
         df, k_sources=100).collect()}
     for node, want in exact.items():
         assert got[node] == pytest.approx(want, abs=1e-9), node
@@ -156,14 +139,12 @@ def test_sampled_betweenness_subsample_ranks(spark):
     """With k < n the estimate is approximate but the deterministic
     top-degree pivots must still rank the true top bridge first and give
     leaves ~0 (the node_importance contract at corpus scale)."""
-    from kgspark.pipeline.graph import betweenness_centrality_sampled
-
     # hub-and-spoke chain: h1 bridges two stars -> highest betweenness
     edges = ([("h1", f"l{i}") for i in range(6)]
              + [("h2", f"m{i}") for i in range(6)]
              + [("h1", "h2")])
     df = spark.createDataFrame(edges, "src string, dst string")
-    got = {r.node: r.btw for r in betweenness_centrality_sampled(
+    got = {r.node: r.btw for r in betweenness_centrality(
         df, k_sources=4).collect()}
     top = max(got, key=got.get)
     assert top in ("h1", "h2")
@@ -173,8 +154,9 @@ def test_sampled_betweenness_subsample_ranks(spark):
 
 def test_node_importance_large_graph_uses_sampled_path(spark):
     """Forcing max_betweenness_nodes below the node count must route
-    node_importance onto the distributed sampled-Brandes path and still
-    return the full scored node set — no raise (VERDICT r02 item 6)."""
+    node_importance onto the top-degree-pivot arm of the distributed
+    Brandes and still return the full scored node set — no raise
+    (VERDICT r02 item 6)."""
     from kgspark.pipeline.analytics import node_importance
 
     # a 7-node path: enough depth to exercise the multi-level BFS forward
@@ -231,7 +213,6 @@ def test_node_importance_matches_reference_formula(spark):
     size = 10 + 20·importance (visualization.py:207-227) — checked
     against a pure-Python recomputation on a small graph."""
     from kgspark.pipeline.analytics import node_importance
-    from kgspark.pipeline.graph import betweenness_centrality_small
 
     triples = spark.createDataFrame(
         [("u", "a", "p", "b"), ("u", "b", "p", "c"), ("u", "c", "p", "d"),
@@ -245,8 +226,8 @@ def test_node_importance_matches_reference_formula(spark):
         adj.setdefault(s, set()).add(o)
         adj.setdefault(o, set()).add(s)
     deg = {n: len(v) for n, v in adj.items()}
-    btw = betweenness_centrality_small(
-        triples.selectExpr("subject as src", "object as dst"))
+    btw = brandes.betweenness(
+        [("a", "b"), ("b", "c"), ("c", "d"), ("a", "c"), ("d", "e")])
     # eigenvector: 30 fixed normalized power iterations like the engine
     nodes = sorted(adj)
     x = {n: 1 / math.sqrt(len(nodes)) for n in nodes}
@@ -444,29 +425,21 @@ def test_grouped_betweenness_equals_per_group_runs(spark):
 
     from pyspark.sql import functions as F
 
-    from kgspark.pipeline.graph import betweenness_centrality_sampled
-
     rnd = random.Random(13)
-    frames = {}
+    graphs, both = {}, None
     for p, (n, m) in {"p1": (14, 40), "p2": (9, 22), "p3": (17, 55)}.items():
-        es = {(f"{p}_{a}", f"{p}_{b}")
-              for a, b in ((rnd.randrange(n), rnd.randrange(n))
-                           for _ in range(m)) if a != b}
-        frames[p] = spark.createDataFrame(sorted(es), "src string, dst string")
-    both = None
-    for p, df in frames.items():
-        g = df.withColumn("period", F.lit(p))
+        graphs[p] = sorted({(f"{p}_{a}", f"{p}_{b}")
+                            for a, b in ((rnd.randrange(n), rnd.randrange(n))
+                                         for _ in range(m)) if a != b})
+        g = spark.createDataFrame(graphs[p], "src string, dst string") \
+            .withColumn("period", F.lit(p))
         both = g if both is None else both.unionByName(g)
 
     got = {(r["period"], r["node"]): r["btw"]
-           for r in betweenness_centrality_sampled(
-               both, k_sources=None, normalized=True,
-               group_col="period").collect()}
-    want = {}
-    for p, df in frames.items():
-        for r in betweenness_centrality_sampled(
-                df, k_sources=None, normalized=True).collect():
-            want[(p, r["node"])] = r["btw"]
+           for r in betweenness_centrality(
+               both, normalized=True, group_col="period").collect()}
+    want = {(p, node): b for p, es in graphs.items()
+            for node, b in brandes.betweenness(es).items()}
     assert set(got) == set(want)
     for k in want:
         assert abs(got[k] - want[k]) < 1e-9, (k, got[k], want[k])

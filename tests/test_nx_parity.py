@@ -20,8 +20,7 @@ nx = pytest.importorskip("networkx")
 
 from kgspark.pipeline.analytics import graph_metrics, period_graph_metrics
 from kgspark.pipeline.graph import (
-    betweenness_centrality_sampled,
-    betweenness_centrality_small,
+    betweenness_centrality,
     clustering_coefficients,
     connected_components,
     degrees,
@@ -29,6 +28,7 @@ from kgspark.pipeline.graph import (
     louvain,
     triangle_counts,
 )
+from tests.oracle import brandes
 
 
 def _web_graph(n_hubs: int = 4, leaves_per_hub: int = 5, extra: int = 25,
@@ -109,35 +109,37 @@ def test_connected_components_match_nx(spark):
 
 
 def test_eigenvector_matches_nx(spark, web_df, web_g):
-    # both sides pushed to tight convergence so the comparison is the
-    # eigenvector, not the stopping rule (reference uses max_iter=1000,
-    # visualization.py:175)
+    # networkx pushed to tight convergence so the comparison is the
+    # eigenvector, not its stopping rule (reference uses max_iter=1000,
+    # visualization.py:175); the engine's default 30 fixed iterations
+    # land within ~5e-9 of it on this graph
     want = nx.eigenvector_centrality(web_g, max_iter=5000, tol=1e-12)
     got = {
         r.node: r.centrality
-        for r in eigenvector_centrality(web_df, max_iter=120, tol=1e-9).collect()
+        for r in eigenvector_centrality(web_df).collect()
     }
     assert set(got) == set(want)
     for v in want:
         assert got[v] == pytest.approx(want[v], abs=1e-5)
 
 
-def test_betweenness_small_matches_nx(spark, web_df, web_g):
-    got = betweenness_centrality_small(web_df)
-    want = nx.betweenness_centrality(web_g)
-    assert set(got) == set(want)
-    for v in want:
-        assert got[v] == pytest.approx(want[v], abs=1e-9)
+def test_reference_brandes_matches_nx(web_edges, web_g):
+    # the plain-Python reference the betweenness tests in
+    # test_graph_algos.py compare against, on the web graph and on a path
+    # deeper than any fixed BFS horizon
+    path = [(f"p{i:02d}", f"p{i + 1:02d}") for i in range(63)]
+    for edges, g in ((web_edges, web_g), (path, _nx_graph(path))):
+        got = brandes.betweenness(edges)
+        want = nx.betweenness_centrality(g)
+        assert set(got) == set(want)
+        for v in want:
+            assert got[v] == pytest.approx(want[v], abs=1e-9)
 
 
 def test_betweenness_sampled_all_sources_matches_nx(spark, web_df, web_g):
-    # k_sources >= n: the distributed estimator degenerates to exact
-    # Brandes, so it must reproduce networkx bit-for-bit (up to float sum
-    # order)
-    got = {
-        r.node: r.btw
-        for r in betweenness_centrality_sampled(web_df, k_sources=10**6).collect()
-    }
+    # k_sources=None makes every node a source: exact Brandes, so it must
+    # reproduce networkx up to float sum order
+    got = {r.node: r.btw for r in betweenness_centrality(web_df).collect()}
     want = nx.betweenness_centrality(web_g)
     assert set(got) == set(want)
     for v in want:
